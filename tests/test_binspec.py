@@ -181,12 +181,16 @@ def test_category_large_set_array_branch_matches_when_chain(spark):
         (bs.StrCategory(cats_s), "sv"),
     ):
         assert spec.n > bs._CAT_CASE_MAX
-        big = df.select(spec.raw_id_col(F.col(col)).alias("id")).collect()
-        # force the when-chain branch by lowering the threshold
+        big = df.select(
+            F.expr(spec.raw_id_sql(col, bs.SPARK)).alias("id")
+        ).collect()
+        # force the when-chain branch by raising the threshold
         orig = bs._CAT_CASE_MAX
         bs._CAT_CASE_MAX = 10**9
         try:
-            small = df.select(spec.raw_id_col(F.col(col)).alias("id")).collect()
+            small = df.select(
+                F.expr(spec.raw_id_sql(col, bs.SPARK)).alias("id")
+            ).collect()
         finally:
             bs._CAT_CASE_MAX = orig
         assert [r["id"] for r in big] == [r["id"] for r in small]

@@ -530,20 +530,16 @@ def test_monotone_error_contracts(spark):
         MonotoneRegular(4, 0.0, 6.0, fwd=_m.cos, inv=_m.acos)
     with pytest.raises(ValueError, match="0 < lo < hi < 1"):
         MonotoneRegular.logit(4, 0.2, 1.5)
-    # fast-path oracle without a SQL mirror refuses
-    sq = MonotoneRegular(4, 1.0, 2.0, fwd=lambda x: x * x,
-                         inv=_m.sqrt, fwd_col=lambda c: c * c,
-                         exact=False)
-    with pytest.raises(ValueError, match="fwd_sql"):
-        sq.raw_id_sql("x")
-    # without fwd_col there is no fast path: exact is forced on
-    e = MonotoneRegular(4, 1.0, 2.0, fwd=lambda x: x * x, inv=_m.sqrt)
+    # without fwd_sql there is no fast path: exact is forced on, even
+    # when exact=False is asked for
+    e = MonotoneRegular(4, 1.0, 2.0, fwd=lambda x: x * x, inv=_m.sqrt,
+                        exact=False)
     assert e.exact
 
 
 def test_monotone_named_constructors_exact_by_default():
     """The named constructors honor the class's documented
-    deterministic-by-default contract even though they ship fwd_col:
+    deterministic-by-default contract even though they ship fwd_sql:
     bare logit()/asinh() must take the literal-edge path, and
     exact=False must still opt into the fast path."""
     from xarray_histogram_spark import MonotoneRegular
@@ -667,3 +663,41 @@ def F_mod_even(col):
     from pyspark.sql import functions as _F
 
     return (_F.col(col) % 2) == 0
+
+
+_QUOTE_ROWS = [
+    (0.5, "a'b", 1.0), (1.5, "c\\d", 2.0), (2.5, "a'b", 0.5),
+    (None, None, 1.5), (float("nan"), "zz", 3.0), (9.0, "e", 1.0),
+    (-1.0, "c\\d", 2.5),
+]
+
+
+@pytest.mark.parametrize("flow", [False, True])
+@pytest.mark.parametrize(
+    "spec,col",
+    [
+        (Regular(3, 0.0, 3.0), "x"),
+        (Variable((0.0, 1.0, 2.5, 3.0), binary=True), "x"),
+        (StrCategory(("a'b", "c\\d", "e")), "s"),
+    ],
+    ids=["regular", "variable", "strcategory"],
+)
+def test_column_names_needing_quotes(spark, spec, col, flow):
+    """The bucketize is SQL text, so column names are quoted identifiers
+    and category values escaped literals: a histogram over columns named
+    ``unit price``/``cat x``/``unit weight`` equals the histogram of the
+    same data under plain names — ungrouped, weighted and grouped."""
+    plain = spark.createDataFrame(_QUOTE_ROWS, "x double, s string, w double")
+    odd = plain.toDF("unit price", "cat x", "unit weight")
+    names = {"x": "unit price", "s": "cat x", "w": "unit weight"}
+    group = "s" if col == "x" else "x"
+    for kw in ({}, {"weights": "w"}, {"group_by": [group]}):
+        odd_kw = {
+            k: [names[g] for g in v] if k == "group_by" else names[v]
+            for k, v in kw.items()
+        }
+        want = histogram(plain, col, spec, flow=flow, **kw).df
+        got = histogram(odd, names[col], spec, flow=flow, **odd_kw).df
+        # repr: a NaN group key compares unequal to itself
+        rows = sorted(repr(tuple(r)) for r in got.collect())
+        assert rows and rows == sorted(repr(tuple(r)) for r in want.collect())

@@ -9,7 +9,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from xarray_histogram_spark import Regular, histogram
+from xarray_histogram_spark import Regular, Variable, histogram
 
 
 def plan_of(df) -> str:
@@ -242,11 +242,53 @@ def test_ann_no_corpus_scan_join(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
+_LOG_EDGES = tuple(Regular(47, 800.0, 600000.0, transform="log").edges())
+
+
+@pytest.mark.parametrize(
+    "table,col,spec",
+    [
+        ("lineitem", "l_extendedprice", Regular(40, 900.0, 105000.0)),
+        ("orders", "o_totalprice", Variable(_LOG_EDGES, binary=True)),
+    ],
+    ids=["regular", "variable_log_binary"],
+)
+def test_histogramdd_build_py4j_budget(spark, sf_dir, table, col, spec):
+    """Building a histogram plan is driver latency paid by every
+    interactive query, and each py4j command is one JVM round trip.  The
+    bucketize is SQL text parsed once per expression, so the build stays
+    within a fixed command budget whatever the edge count (a binary search
+    over 47 edges built from Column objects cost ~1,700 commands)."""
+    from xarray_histogram_spark import histogramdd
+
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet").cache()
+    gc = spark.sparkContext._gateway._gateway_client
+    orig = gc.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        # py4j's object-release messages ("m\nd\n<id>") follow garbage
+        # collection timing, not the work of the call
+        if not command.startswith("m\nd\n"):
+            n += 1
+        return orig(command, *args, **kwargs)
+
+    try:
+        histogramdd(df, [col], [spec])  # first build resolves the relation
+        gc.send_command = counting
+        histogramdd(df, [col], [spec])
+    finally:
+        gc.send_command = orig
+        df.unpersist()
+    assert 0 < n <= 250
+
+
 def test_registry_wide_no_python_eval(spark, sf_dir):
     """Every registered query plan stays JVM-side — no row-at-a-time or
     Arrow Python eval in any data path — except the operators whose
-    SEMANTICS are a Python kernel (multimodal decode, the Arrow fill
-    strategy, applyInPandasWithState).  Cheap-to-build plans only (some
+    SEMANTICS are a Python kernel (multimodal decode,
+    applyInPandasWithState).  Cheap-to-build plans only (some
     registry entries run driver-side jobs at build time)."""
     import io
     from contextlib import redirect_stdout
@@ -254,7 +296,7 @@ def test_registry_wide_no_python_eval(spark, sf_dir):
     from xarray_histogram_spark import entry_queries as eq
 
     allowed_python = {"mm_decode_meta", "mm_decode_image", "mm_sample_frames",
-                      "hist_fill_arrow_path", "streaming_stateful_hist"}
+                      "streaming_stateful_hist"}
     expensive_build = {"hist_range_infer", "hist_quantile_bins",
                        "sim_ann_indexed", "dedup_components",
                        "streaming_window_hist", "hist_growth_categories",

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from xarray_histogram_spark.binspec import (
+    SPARK,
     IntCategory,
     Integer,
     Regular,
@@ -30,6 +31,8 @@ def py_regular_id(spec: Regular, x):
             return spec.n
         y, lo, hi = math.log(x), math.log(spec.lo), math.log(spec.hi)
     elif spec.transform == "sqrt":
+        if x < 0:
+            return spec.n  # sqrt → NaN, which boost routes to overflow
         y, lo, hi = math.sqrt(x), math.sqrt(spec.lo), math.sqrt(spec.hi)
     elif spec.transform == "pow":
         if x < 0:
@@ -48,7 +51,8 @@ def py_regular_id(spec: Regular, x):
 
 def spark_ids(spark, spec, values, typ="double"):
     df = spark.createDataFrame([(v,) for v in values], f"x: {typ}")
-    return [r["b"] for r in df.select(spec.raw_id_col(F.col("x")).alias("b")).collect()]
+    ids = F.expr(spec.raw_id_sql("x", SPARK)).alias("b")
+    return [r["b"] for r in df.select(ids).collect()]
 
 
 @settings(max_examples=_ex(20), deadline=None)
@@ -166,17 +170,29 @@ def test_log_axis_edges(spark):
     )
 )
 def test_variable_binary_equals_linear(spark, values):
-    """The O(log n) binary-search path agrees with the O(n) fold path."""
-    edges = (0.0, 0.5, 1.5, 2.0, 7.25, 9.0, 11.5, 20.0)
-    lin = Variable(edges)
-    bin_ = Variable(edges, binary=True)
-    assert spark_ids(spark, lin, values) == spark_ids(spark, bin_, values)
+    """The O(log n) binary-search path agrees with the O(n) fold path
+    (the default form of axes wider than 256 bins)."""
+    wide = tuple(i / 10.0 for i in range(-10, 291))  # 300 bins
+    for edges in ((0.0, 0.5, 1.5, 2.0, 7.25, 9.0, 11.5, 20.0), wide):
+        lin = Variable(edges)
+        bin_ = Variable(edges, binary=True)
+        assert spark_ids(spark, lin, values) == spark_ids(spark, bin_, values)
+
+
+def test_sqrt_negative_routes_to_overflow(spark):
+    """sqrt of a negative is NaN, which lands in OVERFLOW (Spark's NaN
+    ordering), not in a core bin or underflow."""
+    spec = Regular(6, 0.5, 5.0, transform="sqrt")
+    values = [-24.0, -0.5, -0.0, 0.25, 1.0, 4.0, 25.0, None]
+    got = spark_ids(spark, spec, values)
+    assert got == [py_regular_id(spec, v) for v in values]
+    assert got[:2] == [spec.n, spec.n]
 
 
 # ---------------------------------------------------------------------------
-# keep_pred_col ≡ id-range filter (the raw-value keep predicate used to avoid
+# keep_sql ≡ id-range filter (the raw-value keep predicate used to avoid
 # re-evaluating bucketize in the filter must keep EXACTLY the rows whose raw
-# id lies in keep_range)
+# id lies in keep_range), and kept_id_sql ≡ raw_id_sql on the rows it keeps
 # ---------------------------------------------------------------------------
 
 import numpy as np
@@ -187,11 +203,15 @@ def _kept_sets(spark, spec, values, typ, flow):
         [(i, v) for i, v in enumerate(values)], f"i: int, x: {typ}"
     )
     lo, hi = spec.keep_range(flow)
-    by_id = df.where(
-        spec.raw_id_col(F.col("x")).between(F.lit(lo), F.lit(hi))
-    )
-    pred = spec.keep_pred_col(F.col("x"), flow)
+    raw = F.expr(spec.raw_id_sql("x", SPARK))
+    by_id = df.where(raw.between(F.lit(lo), F.lit(hi)))
+    pred = spec.keep_sql("x", flow, SPARK)
     by_pred = df.where(pred) if pred is not None else df
+    if pred is not None and not flow:
+        kept = by_pred.select(
+            raw.alias("r"), F.expr(spec.kept_id_sql("x", SPARK)).alias("k")
+        )
+        assert all(r["r"] == r["k"] for r in kept.collect())
     key = lambda d: sorted(r["i"] for r in d.select("i").collect())
     return key(by_id), key(by_pred)
 
@@ -246,18 +266,19 @@ def test_keep_pred_equals_id_filter(spark, spec, typ, values, flow):
     )
 )
 def test_scaled_weight_col_matches_numpy_formula(spark, ws):
-    """The engine's int64 weight quantization must equal the numpy fill
-    path's half-away-from-zero formula bit-for-bit (the cross-engine
-    determinism contract), including exact .5 ties."""
+    """The engine's int64 weight quantization (the SQL both Spark and the
+    DuckDB oracle run) must equal numpy's half-away-from-zero formula
+    bit-for-bit (the cross-engine determinism contract), including exact
+    .5 ties."""
     import numpy as np
 
-    from xarray_histogram_spark.plans.histogram import scaled_weight_col
+    from xarray_histogram_spark.oracle import scaled_weight_sql
 
     ws = ws + [0.5e-6, -0.5e-6, 2.5e-6, -2.5e-6]  # exact ties at scale 1e6
     df = spark.createDataFrame([(float(w),) for w in ws], "w: double")
     got = [
         r[0]
-        for r in df.select(scaled_weight_col(F.col("w"), 1e6)).collect()
+        for r in df.select(F.expr(scaled_weight_sql("w", 1e6))).collect()
     ]
     x = np.array(ws, dtype=np.float64) * 1e6
     want = np.where(x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)).astype(np.int64)

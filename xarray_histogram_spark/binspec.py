@@ -8,14 +8,22 @@ flags, flow-label encodings (±inf for floats, int64 min/max for ints,
 See /root/reference/src/xarray_histogram/core.py:524-646 and
 accessor.py:148-250 for the semantics being reproduced.
 
-Spark-first design: each spec compiles the value→bin-id lookup to a pure
-Catalyst Column expression (``raw_id_col``) that stays inside whole-stage
-codegen — O(1) arithmetic for Regular/Integer, a vectorised JVM fold for
-Variable, ``array_position`` for categories.  Every spec ALSO emits the exact
-same arithmetic as a DuckDB SQL snippet (``raw_id_sql``) so the driver's
-oracle comparison is bit-identical: both engines run the same IEEE-754
-double operations in the same order (no transcendentals in the hot path —
-log-transformed axes precompute their edges Python-side for the exact path).
+One bucketize source: each spec renders its value→bin-id lookup ONCE, as
+SQL text over a column expression the caller supplies, in three pieces —
+the full raw id (``raw_id_sql``), the id of rows that already passed the
+keep filter (``kept_id_sql``: the bare arithmetic or binary-search core)
+and the raw-value keep predicate (``keep_sql``).  The Spark planner parses
+the text with ``F.expr``/``selectExpr`` (one py4j round trip per
+expression), and it compiles into whole-stage codegen: O(1) arithmetic for
+Regular/Integer, a nested-CASE binary search for edge arrays, an equality
+CASE chain for small category sets.  The DuckDB oracle runs the same text,
+so both engines execute the same IEEE-754 double operations in the same
+order and the driver's hash comparison is bit-identical (no transcendentals
+in the hot path — log-transformed axes precompute their edges Python-side
+for the exact path).  The dialects differ only in list literals (category
+lookups above ``_CAT_CASE_MAX``, edge folds above ``_BSEARCH_MAX_BINS`` —
+see ``_list_sql``) and in backslashes inside string literals (``slit``);
+the calling module passes ``dialect``.
 
 Bin-id convention (uniform across the engine):
   raw id ∈ [-1, n]:  -1 = underflow, 0..n-1 = core bins, n = overflow.
@@ -29,21 +37,23 @@ import math
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional, Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 I64_MIN = -(2**63)
 I64_MAX = 2**63 - 1
 FLOW_STR = "_flow_bin"
+# SQL dialects of the rendered bucketize text
+SPARK = "spark"
+DUCKDB = "duckdb"
 # category sets at or below this size compile to direct-equality
-# when-chains instead of array_position (measured ~1.5x faster per row);
+# CASE chains instead of array_position (measured ~1.5x faster per row);
 # larger sets keep the array form to stay clear of codegen size limits
 _CAT_CASE_MAX = 32
 
 
 def flit(v: float) -> str:
-    """DuckDB literal for a Python float that parses back to the same double.
+    """SQL literal (DuckDB and Spark) for a Python float that parses back
+    to the same double.
 
     Goes through a VARCHAR cast: DuckDB parses bare numeric literals as
     DECIMAL and the DECIMAL→DOUBLE conversion is not correctly rounded
@@ -59,9 +69,47 @@ def flit(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
-def slit(s: str) -> str:
-    """DuckDB single-quoted string literal."""
+def slit(s: str, dialect: str = DUCKDB) -> str:
+    """Single-quoted string literal.  Both engines read ``''`` as a quote;
+    Spark also treats a backslash as an escape, so it is doubled there."""
+    if dialect == SPARK:
+        s = s.replace("\\", "\\\\")
     return "'" + s.replace("'", "''") + "'"
+
+
+def _dbl(expr: str) -> str:
+    return f"CAST({expr} AS DOUBLE)"
+
+
+def _range_sql(x: str, lo: float, hi: float) -> str:
+    """``lo <= x < hi`` — NULL and NaN fail it on both engines."""
+    return f"{x} >= {flit(lo)} AND {x} < {flit(hi)}"
+
+
+def _list_sql(op: str, items: Sequence[str], x: str, dialect: str) -> str:
+    """The only dialect-specific bucketize SQL: a lookup over a literal list.
+
+    ``op="position"``: 1-based position of ``x`` in ``items``, 0 if absent.
+    ``op="contains"``: whether ``x`` is one of ``items``.
+    ``op="count_le"``: how many ``items`` are ``<= x``, as INT."""
+    body = ", ".join(items)
+    if dialect == SPARK:
+        arr = f"array({body})"
+        if op in ("position", "contains"):
+            return f"array_{op}({arr}, {x})"
+        return (
+            f"aggregate({arr}, 0, (__acc, __e) -> "
+            f"__acc + CASE WHEN {x} >= __e THEN 1 ELSE 0 END)"
+        )
+    lst = f"[{body}]"
+    if op == "position":
+        return f"COALESCE(list_position({lst}, {x}), 0)"
+    if op == "contains":
+        return f"list_contains({lst}, {x})"
+    return (
+        f"CAST(list_sum(list_transform({lst}, "
+        f"__e -> CASE WHEN {x} >= __e THEN 1 ELSE 0 END)) AS INT)"
+    )
 
 
 @dataclass(frozen=True)
@@ -134,22 +182,18 @@ class BinSpec:
     def labels(self, flow: bool = False) -> list:
         return [b.label for b in self.bins(flow)]
 
-    # ---- compilation ----
-    def raw_id_col(self, c: Column) -> Column:
-        """Spark Column: value -> raw bin id in [-1, n]."""
+    # ---- compilation: SQL text over the caller's column expression ----
+    def raw_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        """Value -> raw bin id in [-1, n] (NULL/NaN -> overflow)."""
         raise NotImplementedError
 
-    def raw_id_sql(self, expr: str) -> str:
-        """DuckDB SQL mirroring raw_id_col exactly (same IEEE ops, same order)."""
-        raise NotImplementedError
-
-    def raw_id_col_kept(self, c: Column) -> Column:
-        """``raw_id_col`` under the caller's guarantee that ``c`` already
-        passed ``keep_pred_col(c, flow=False)`` (non-null, non-NaN,
+    def kept_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        """``raw_id_sql`` under the caller's guarantee that ``expr`` already
+        passed ``keep_sql(expr, flow=False)`` (non-null, non-NaN,
         in-range): families that can drop the NULL/NaN/flow CASE wrapper
         return the bare bucketize arithmetic — identical ids on kept rows,
         measurably cheaper per row.  Default: the full expression."""
-        return self.raw_id_col(c)
+        return self.raw_id_sql(expr, dialect)
 
     def keep_range(self, flow: bool) -> tuple[int, int]:
         """Inclusive [lo, hi] raw-id range of EMITTED bins.
@@ -166,27 +210,36 @@ class BinSpec:
         raise NotImplementedError
 
     def _raw_id_min(self) -> int:
-        """Smallest id ``raw_id_col`` can emit (-1 for interval axes,
+        """Smallest id ``raw_id_sql`` can emit (-1 for interval axes,
         0 for category axes, which have no underflow)."""
         return -1
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        """Raw-VALUE predicate equivalent to ``raw_id_col(c) ∈ keep_range``.
+    def keep_sql(
+        self, expr: str, flow: bool, dialect: str = DUCKDB
+    ) -> Optional[str]:
+        """Raw-VALUE predicate equivalent to ``raw_id_sql(expr) ∈ keep_range``.
 
         Filtering on the raw column instead of the computed id matters:
         Catalyst pushes the keep filter below the bucketize projection by
-        substituting the id expression into both BETWEEN bounds, so the
+        substituting the id expression into both range bounds, so the
         (potentially expensive) bucketize CASE would be evaluated ~3× per
         row.  A direct range/membership predicate on the value is evaluated
         once, stays cheap in codegen, and can push into the parquet scan.
-        ``None`` means every raw id is kept (no filter needed).  Subclasses
-        override; this fallback re-evaluates the id expression and is only
-        hit for unusual partial-flow configurations.
+        ``None`` means every raw id is kept (no filter needed).  Families
+        give the core-bins predicate (``_keep_core_sql``); other partial-flow
+        configurations fall back to re-evaluating the id expression.
         """
         lo, hi = self.keep_range(flow)
         if lo <= self._raw_id_min() and hi >= self.n:
             return None
-        return self.raw_id_col(c).between(F.lit(lo), F.lit(hi))
+        if (lo, hi) == (0, self.n - 1):
+            return self._keep_core_sql(expr, dialect)
+        rid = self.raw_id_sql(expr, dialect)
+        return f"({rid}) >= {lo} AND ({rid}) <= {hi}"
+
+    def _keep_core_sql(self, expr: str, dialect: str) -> str:
+        """Raw-value predicate for ``raw id ∈ [0, n-1]``."""
+        raise NotImplementedError
 
     def label_sql_lit(self, label: Any) -> str:
         if self.label_type == "double":
@@ -196,17 +249,6 @@ class BinSpec:
         if self.label_type == "boolean":
             return "TRUE" if label else "FALSE"
         return slit(str(label))
-
-    def label_lit(self, label: Any) -> Column:
-        """The bin label as a typed Spark literal (Column twin of
-        ``label_sql_lit``)."""
-        if self.label_type == "double":
-            return F.lit(float(label)).cast("double")
-        if self.label_type == "bigint":
-            return F.lit(int(label)).cast("bigint")
-        if self.label_type == "boolean":
-            return F.lit(bool(label))
-        return F.lit(str(label))
 
     # ---- (de)serialization for sidecar metadata ----
     def to_dict(self) -> dict:
@@ -383,121 +425,90 @@ class Regular(BinSpec):
             raise TypeError(f"Regular axis needs a numeric column, got {col}: {dt}")
 
     # -- compilation --
-    def _y_span(self, c: Column) -> tuple[Column, float, float]:
+    def _searched(self) -> bool:
+        """Literal-edge search instead of O(1) arithmetic (exact-mode
+        transformed axes)."""
+        return self.transform is not None and self.exact
+
+    def _y_span(self, x: str) -> tuple[str, float, float]:
+        """(transformed value, transformed lo, transformed hi) of the O(1)
+        path; ``x`` is the value already cast to DOUBLE."""
         if self.transform is None:
-            return c.cast("double"), float(self.lo), float(self.hi)
+            return x, float(self.lo), float(self.hi)
         if self.transform == "log":
-            return F.log(c.cast("double")), math.log(self.lo), math.log(self.hi)
+            return f"ln({x})", math.log(self.lo), math.log(self.hi)
         if self.transform == "pow":
             # Math.pow is within-1-ulp, not correctly rounded — the fast
             # path may differ from another engine near an edge; use
             # exact=True (literal-edge scan) when oracle determinism matters
             p = float(self.power)
             return (
-                F.pow(c.cast("double"), F.lit(p)),
-                math.pow(self.lo, p),
+                f"pow({x}, {flit(p)})", math.pow(self.lo, p),
                 math.pow(self.hi, p),
             )
         # sqrt — IEEE correctly rounded, safe to mirror
-        return F.sqrt(c.cast("double")), math.sqrt(self.lo), math.sqrt(self.hi)
+        return f"sqrt({x})", math.sqrt(self.lo), math.sqrt(self.hi)
 
-    def _linear_core(self, c: Column) -> Column:
+    def _bad_sql(self, x: str, y: str) -> str:
+        """Inputs routed to overflow before any range test (boost's NaN)."""
+        bad = f"{x} IS NULL OR isnan({x})"
+        if self.transform == "log":
+            bad += f" OR {x} <= {flit(0.0)}"
+        return bad
+
+    def _linear_core_sql(self, y: str, ylo: float, yhi: float) -> str:
         """Bare bucketize for in-range values: least(floor((y-lo)·n/span), n-1)."""
         n = self.n
-        y, ylo, yhi = self._y_span(c)
-        t = (y - F.lit(ylo)) * F.lit(float(n)) / F.lit(yhi - ylo)
-        return F.least(F.floor(t).cast("int"), F.lit(n - 1))
-
-    def _linear_id_col(self, c: Column) -> Column:
-        y, ylo, yhi = self._y_span(c)
-        core = self._linear_core(c)
-        x = c.cast("double")
-        bad = x.isNull() | F.isnan(x)
-        if self.transform == "log":
-            bad = bad | (x <= F.lit(0.0))
-        out = F.when(bad, F.lit(self.n))
-        if self.transform == "pow":
-            # x < 0 is out of the pow domain (lo >= 0 enforced): underflow,
-            # matching the exact=True edge scan (x < edges[0]).  Without
-            # this, even powers fold negatives onto positive core bins
-            # (pow(-3, 2) = 9) and the two paths of the same spec disagree.
-            out = out.when(x < F.lit(0.0), F.lit(-1))
         return (
-            out
-            .when(y < F.lit(ylo), F.lit(-1))
-            .when(y >= F.lit(yhi), F.lit(self.n))
-            .otherwise(core)
+            f"LEAST(CAST(FLOOR(({y} - {flit(ylo)}) * {flit(float(n))} / "
+            f"{flit(yhi - ylo)}) AS INT), {n - 1})"
         )
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.transform is not None and self.exact:
-            return _search_id_col(c, self.edges())
-        return self._linear_id_col(c)
+    def raw_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        if self._searched():
+            return _search_id_sql(expr, self.edges(), dialect)
+        n = self.n
+        x = _dbl(expr)
+        y, ylo, yhi = self._y_span(x)
+        # pow: x < 0 is out of the pow domain (lo >= 0 enforced): underflow,
+        # matching the exact=True edge scan (x < edges[0]).  Without this,
+        # even powers fold negatives onto positive core bins (pow(-3, 2) =
+        # 9) and the two paths of the same spec disagree.
+        neg = (
+            f"WHEN {x} < {flit(0.0)} THEN -1 " if self.transform == "pow"
+            else ""
+        )
+        return (
+            f"CASE WHEN {self._bad_sql(x, y)} THEN {n} {neg}"
+            f"WHEN {y} < {flit(ylo)} THEN -1 "
+            f"WHEN {y} >= {flit(yhi)} THEN {n} "
+            f"ELSE {self._linear_core_sql(y, ylo, yhi)} END"
+        )
 
-    def raw_id_col_kept(self, c: Column) -> Column:
+    def kept_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
         # kept rows satisfy ylo <= y < yhi (the keep pred uses the same
         # transformed comparisons), so the NaN/flow wrapper is redundant
         # and the bare core emits identical ids
-        if self.transform is not None and self.exact:
-            return _search_id_col_kept(c, self.edges())
-        return self._linear_core(c)
+        if self._searched():
+            return _search_id_sql(expr, self.edges(), dialect, kept=True)
+        return self._linear_core_sql(*self._y_span(_dbl(expr)))
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == -1 and hi_id == self.n:
-            return None
-        if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
-        if self.transform is not None and not self.exact:
-            # the fast transform path buckets the TRANSFORMED value, so the
-            # keep set must be decided by the same comparisons (log(x) vs
-            # log(lo)) — a value-space bound could disagree by a libm ulp.
-            # NULL/NaN/out-of-domain transform results all fail the range.
-            if self.transform == "pow":
-                # the x >= 0 domain term mirrors _linear_id_col's
-                # negative→underflow guard (underflow is outside keep range
-                # here)
-                x = c.cast("double")
-                y = F.pow(x, F.lit(float(self.power)))
-                return (
-                    (x >= F.lit(0.0))
-                    & (y >= F.lit(self._tf(self.lo)))
-                    & (y < F.lit(self._tf(self.hi)))
-                )
-            y = (F.log if self.transform == "log" else F.sqrt)(c.cast("double"))
-            return (y >= F.lit(self._tf(self.lo))) & (y < F.lit(self._tf(self.hi)))
-        # linear & exact edge-scan: endpoints are pinned to lo/hi, so
-        # id ∈ [0, n-1] ⟺ lo <= x < hi; NULL and NaN both fail the range
-        x = c.cast("double")
-        return (x >= F.lit(float(self.lo))) & (x < F.lit(float(self.hi)))
-
-    def raw_id_sql(self, expr: str) -> str:
-        if self.transform is not None and self.exact:
-            return _search_id_sql(expr, self.edges())
-        n = self.n
-        if self.transform is None:
-            y, ylo, yhi = f"CAST({expr} AS DOUBLE)", float(self.lo), float(self.hi)
-        elif self.transform == "log":
-            y, ylo, yhi = f"ln(CAST({expr} AS DOUBLE))", math.log(self.lo), math.log(self.hi)
-        elif self.transform == "pow":
-            p = float(self.power)
-            y = f"pow(CAST({expr} AS DOUBLE), {flit(p)})"
-            ylo, yhi = math.pow(self.lo, p), math.pow(self.hi, p)
-        else:
-            y, ylo, yhi = f"sqrt(CAST({expr} AS DOUBLE))", math.sqrt(self.lo), math.sqrt(self.hi)
-        span = yhi - ylo
-        x = f"CAST({expr} AS DOUBLE)"
-        bad = f"{x} IS NULL OR isnan({x})"
-        if self.transform == "log":
-            bad += f" OR {x} <= 0.0"
-        neg = f"WHEN {x} < 0.0 THEN -1 " if self.transform == "pow" else ""
-        return (
-            f"CASE WHEN {bad} THEN {n} "
-            f"{neg}"
-            f"WHEN {y} < {flit(ylo)} THEN -1 "
-            f"WHEN {y} >= {flit(yhi)} THEN {n} "
-            f"ELSE LEAST(CAST(FLOOR(({y} - {flit(ylo)}) * {flit(float(n))} / {flit(span)}) AS INT), {n - 1}) END"
-        )
+    def _keep_core_sql(self, expr: str, dialect: str) -> str:
+        x = _dbl(expr)
+        if self._searched():
+            # the edge scan pins its endpoints to lo/hi, so
+            # id ∈ [0, n-1] ⟺ lo <= x < hi
+            return _range_sql(x, self.lo, self.hi)
+        # the O(1) path buckets the TRANSFORMED value, so the keep set is
+        # decided by the same comparisons (log(x) vs log(lo)) — a
+        # value-space bound could disagree by a libm ulp.  NULL/NaN/
+        # out-of-domain transform results all fail the range.
+        y, ylo, yhi = self._y_span(x)
+        pred = _range_sql(y, ylo, yhi)
+        if self.transform == "pow":
+            # mirrors raw_id_sql's negative → underflow guard
+            pred = f"{x} >= {flit(0.0)} AND {pred}"
+        return pred
 
     def to_dict(self) -> dict:
         return {
@@ -513,63 +524,8 @@ class Regular(BinSpec):
         }
 
 
-def _edge_scan_id_col(c: Column, edges: Sequence[float]) -> Column:
-    """raw id via exact edge comparisons: (#edges <= x) - 1. JVM fold, codegen'd."""
-    n = len(edges) - 1
-    x = c.cast("double")
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    cnt = F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, e: acc + F.when(x >= e, F.lit(1)).otherwise(F.lit(0)),
-    )
-    bad = x.isNull() | F.isnan(x)
-    return F.when(bad, F.lit(n)).otherwise(F.least(cnt - 1, F.lit(n)))
-
-
-def _edge_scan_id_sql(expr: str, edges: Sequence[float]) -> str:
-    n = len(edges) - 1
-    x = f"CAST({expr} AS DOUBLE)"
-    lst = "[" + ", ".join(flit(e) for e in edges) + "]"
-    cnt = f"list_sum(list_transform({lst}, e -> CASE WHEN {x} >= e THEN 1 ELSE 0 END))"
-    return (
-        f"CASE WHEN {x} IS NULL OR isnan({x}) THEN {n} "
-        f"ELSE LEAST(CAST({cnt} AS INT) - 1, {n}) END"
-    )
-
-
-def _bsearch_core(c: Column, edges: Sequence[float]) -> Column:
-    """Binary search body — precondition: edges[0] <= x < edges[-1]."""
-    x = c.cast("double")
-
-    def rec(lo: int, hi: int) -> Column:
-        # precondition: edges[lo] <= x < edges[hi]; bins lo..hi-1
-        if hi - lo == 1:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(x < F.lit(float(edges[mid])), rec(lo, mid)).otherwise(
-            rec(mid, hi)
-        )
-
-    return rec(0, len(edges) - 1)
-
-
-def _bsearch_id_col(c: Column, edges: Sequence[float]) -> Column:
-    """O(log n) binary-search bucketize as a balanced nested-CASE tree —
-    codegen'd, exact comparisons, mirrored 1:1 in SQL."""
-    x = c.cast("double")
-    n = len(edges) - 1
-    bad = x.isNull() | F.isnan(x)
-    return (
-        F.when(bad, F.lit(n))
-        .when(x < F.lit(float(edges[0])), F.lit(-1))
-        .when(x >= F.lit(float(edges[-1])), F.lit(n))
-        .otherwise(_bsearch_core(c, edges))
-    )
-
-
 # Edge-array bucketize strategy: the nested-CASE binary search stays inside
-# whole-stage codegen (branchy but compiled), while the F.aggregate edge
+# whole-stage codegen (branchy but compiled), while the ``aggregate`` edge
 # fold is evaluated per-row through the higher-order-function interpreter —
 # measured ~2x slower on a 600k-row scan even for 3 edges.  The CASE tree's
 # generated code grows linearly with the edge count, so very wide axes fall
@@ -579,29 +535,22 @@ def _bsearch_id_col(c: Column, edges: Sequence[float]) -> Column:
 _BSEARCH_MAX_BINS = 256
 
 
-def _search_id_col(c: Column, edges: Sequence[float]) -> Column:
-    if len(edges) - 1 <= _BSEARCH_MAX_BINS:
-        return _bsearch_id_col(c, edges)
-    return _edge_scan_id_col(c, edges)
-
-
-def _search_id_col_kept(c: Column, edges: Sequence[float]) -> Column:
-    if len(edges) - 1 <= _BSEARCH_MAX_BINS:
-        return _bsearch_core(c, edges)
-    return _edge_scan_id_col(c, edges)
-
-
-def _search_id_sql(expr: str, edges: Sequence[float]) -> str:
-    if len(edges) - 1 <= _BSEARCH_MAX_BINS:
-        return _bsearch_id_sql(expr, edges)
-    return _edge_scan_id_sql(expr, edges)
-
-
-def _bsearch_id_sql(expr: str, edges: Sequence[float]) -> str:
-    x = f"CAST({expr} AS DOUBLE)"
+def _search_id_sql(
+    expr: str, edges: Sequence[float], dialect: str, *, kept: bool = False,
+    binary: bool = False,
+) -> str:
+    """Raw id via exact edge comparisons.  ``kept``: the caller guarantees
+    edges[0] <= x < edges[-1], so the binary search drops its wrapper.
+    ``binary`` forces the binary search at any width."""
+    x = _dbl(expr)
     n = len(edges) - 1
+    bad = f"{x} IS NULL OR isnan({x})"
+    if not binary and n > _BSEARCH_MAX_BINS:
+        cnt = _list_sql("count_le", [flit(e) for e in edges], x, dialect)
+        return f"CASE WHEN {bad} THEN {n} ELSE LEAST({cnt} - 1, {n}) END"
 
     def rec(lo: int, hi: int) -> str:
+        # precondition: edges[lo] <= x < edges[hi]; bins lo..hi-1
         if hi - lo == 1:
             return str(lo)
         mid = (lo + hi) // 2
@@ -610,8 +559,10 @@ def _bsearch_id_sql(expr: str, edges: Sequence[float]) -> str:
             f"ELSE {rec(mid, hi)} END"
         )
 
+    if kept:
+        return rec(0, n)
     return (
-        f"CASE WHEN {x} IS NULL OR isnan({x}) THEN {n} "
+        f"CASE WHEN {bad} THEN {n} "
         f"WHEN {x} < {flit(edges[0])} THEN -1 "
         f"WHEN {x} >= {flit(edges[-1])} THEN {n} "
         f"ELSE {rec(0, n)} END"
@@ -636,20 +587,20 @@ class MonotoneRegular(Regular):
     oracle cannot diverge by a libm ulp, and NOTHING of the Python
     callables ever ships to executors (zero Python in the hot path).
 
-    Pass ``fwd_col`` (a ``Column -> Column`` builder using JVM functions)
-    with ``exact=False`` for the O(1) transformed-bucketize fast path
-    ``floor((fwd(x) - fwd(lo)) · n / span)``; NULL/NaN inputs and NaN/NULL
+    Pass ``fwd_sql`` (a ``str -> str`` builder of SQL over the DOUBLE
+    value, run by both Spark and the DuckDB oracle) with ``exact=False``
+    for the O(1) transformed-bucketize fast path
+    ``floor((fwd(x) - fwd(lo)) · n / span)``; without ``fwd_sql`` there is
+    no fast path and ``exact`` is forced on.  NULL/NaN inputs and NaN/NULL
     transform results route to overflow (boost's NaN routing), transformed
-    values below/above the span to under/overflow.  ``fwd_sql`` supplies
-    the DuckDB mirror of the fast path when oracle parity is wanted there
-    too (like pow, a within-1-ulp library function may disagree near an
-    edge — use ``exact=True`` when determinism matters).  BOTH builders
-    MUST be total: under ANSI mode (the Spark 4 default) an out-of-domain
-    division/function in ``fwd_col`` ABORTS the whole job, and DuckDB
-    math functions RAISE on out-of-domain arguments (``ln(0)`` is an
-    OutOfRange error, not NULL) — guard the domain with a ``when``/CASE
-    and return NULL out-of-domain, which routes to overflow (see the
-    ``logit`` constructor for the pattern on both sides).
+    values below/above the span to under/overflow.  Like pow, a
+    within-1-ulp library function may disagree between engines near an
+    edge — use ``exact=True`` when determinism matters.  The builder MUST
+    be total on both engines: under ANSI mode (the Spark 4 default) an
+    out-of-domain division ABORTS the whole job, and DuckDB math functions
+    RAISE on out-of-domain arguments (``ln(0)`` is an OutOfRange error, not
+    NULL) — guard the domain with a CASE and return NULL out-of-domain,
+    which routes to overflow (see the ``logit`` constructor).
 
     Equality/hash ignore the callables (two lambdas never compare
     equal) and compare the RESOLVED geometry — nbins/lo/hi/flow flags/
@@ -664,7 +615,6 @@ class MonotoneRegular(Regular):
 
     fwd: Optional[Callable[[float], float]] = None
     inv: Optional[Callable[[float], float]] = None
-    fwd_col: Optional[Callable[[Column], Column]] = None
     fwd_sql: Optional[Callable[[str], str]] = None
 
     def __post_init__(self) -> None:
@@ -675,8 +625,8 @@ class MonotoneRegular(Regular):
         super().__post_init__()
         if self.fwd is None or self.inv is None:
             raise ValueError("MonotoneRegular needs fwd= and inv= callables")
-        if self.fwd_col is None and not self.exact:
-            # without a Column builder there is no fast path to run
+        if self.fwd_sql is None and not self.exact:
+            # without a SQL builder there is no fast path to run
             object.__setattr__(self, "exact", True)
         if not self._tf(self.lo) < self._tf(self.hi):
             # checked on the raw transform — edges() pins endpoints to
@@ -692,9 +642,9 @@ class MonotoneRegular(Regular):
                 f"computed edges are not: {es[: min(len(es), 5)]}"
             )
 
-    # named conveniences (each ships exact fwd_col/fwd_sql mirrors).
+    # named conveniences (each ships a total fwd_sql).
     # They default to exact=True — the class's documented deterministic
-    # default — even though they supply fwd_col; pass exact=False to opt
+    # default — even though they supply fwd_sql; pass exact=False to opt
     # into the O(1) libm fast path (within-1-ulp Spark/DuckDB divergence
     # possible near bin edges).
     @classmethod
@@ -712,18 +662,10 @@ class MonotoneRegular(Regular):
             nbins, lo, hi,
             fwd=lambda x: math.log(x / (1.0 - x)),
             inv=lambda y: 1.0 / (1.0 + math.exp(-y)),
-            # TOTAL column too: under ANSI mode (Spark 4 default) x=1
-            # would abort the whole job with DIVIDE_BY_ZERO; the CASE
-            # guard evaluates the division only in-domain, out-of-domain
-            # yields NULL -> overflow
-            fwd_col=lambda c: F.when(
-                (c > F.lit(0.0)) & (c < F.lit(1.0)),
-                F.log(c / (F.lit(1.0) - c)),
-            ),
-            # TOTAL mirror: DuckDB ln() RAISES on non-positive arguments
-            # (it does not return NULL like Spark), so the domain guard
-            # must come before the call — out-of-domain yields NULL, which
-            # raw_id_sql routes to overflow exactly like the Spark path
+            # TOTAL: under ANSI mode (Spark 4 default) x=1 would abort the
+            # whole job with DIVIDE_BY_ZERO, and DuckDB ln() RAISES on
+            # non-positive arguments, so the domain guard comes first —
+            # out-of-domain yields NULL, which raw_id_sql routes to overflow
             fwd_sql=lambda e: (
                 f"CASE WHEN ({e}) > 0.0 AND ({e}) < 1.0 "
                 f"THEN ln(({e}) / (1.0 - ({e}))) ELSE NULL END"
@@ -749,8 +691,6 @@ class MonotoneRegular(Regular):
             nbins, lo, hi,
             fwd=math.asinh,
             inv=math.sinh,
-            fwd_col=lambda c: F.signum(c)
-            * F.log(F.abs(c) + F.sqrt(c * c + F.lit(1.0))),
             fwd_sql=lambda e: (
                 f"sign({e}) * ln(abs({e}) + sqrt(({e})*({e}) + 1.0))"
             ),
@@ -782,70 +722,17 @@ class MonotoneRegular(Regular):
     def _tf_inv(self, v: float) -> float:
         return float(self.inv(v))
 
-    # -- compilation --
-    def _y_span(self, c: Column) -> tuple[Column, float, float]:
-        return (
-            self.fwd_col(c.cast("double")),
-            self._tf(self.lo),
-            self._tf(self.hi),
-        )
+    # -- compilation: Regular's, with the fwd_sql transform --
+    def _searched(self) -> bool:
+        return self.exact
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.exact:
-            return _search_id_col(c, self.edges())
-        y, ylo, yhi = self._y_span(c)
-        core = self._linear_core(c)
-        x = c.cast("double")
+    def _y_span(self, x: str) -> tuple[str, float, float]:
+        return f"({self.fwd_sql(x)})", self._tf(self.lo), self._tf(self.hi)
+
+    def _bad_sql(self, x: str, y: str) -> str:
         # NULL/NaN input, or a transform result outside the real line
         # (out-of-domain → NaN/NULL), routes to overflow like boost's NaN
-        bad = x.isNull() | F.isnan(x) | y.isNull() | F.isnan(y)
-        return (
-            F.when(bad, F.lit(self.n))
-            .when(y < F.lit(ylo), F.lit(-1))
-            .when(y >= F.lit(yhi), F.lit(self.n))
-            .otherwise(core)
-        )
-
-    def raw_id_col_kept(self, c: Column) -> Column:
-        if self.exact:
-            return _search_id_col_kept(c, self.edges())
-        return self._linear_core(c)
-
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == -1 and hi_id == self.n:
-            return None
-        if (lo_id, hi_id) != (0, self.n - 1):
-            return BinSpec.keep_pred_col(self, c, flow)
-        if not self.exact:
-            # fast path buckets the TRANSFORMED value — decide keep with
-            # the same comparisons (see Regular.keep_pred_col)
-            y = self.fwd_col(c.cast("double"))
-            return (y >= F.lit(self._tf(self.lo))) & (y < F.lit(self._tf(self.hi)))
-        x = c.cast("double")
-        return (x >= F.lit(float(self.lo))) & (x < F.lit(float(self.hi)))
-
-    def raw_id_sql(self, expr: str) -> str:
-        if self.exact:
-            return _search_id_sql(expr, self.edges())
-        if self.fwd_sql is None:
-            raise ValueError(
-                "oracle SQL for the fast path needs fwd_sql=; use "
-                "exact=True for the literal-edge deterministic path"
-            )
-        n = self.n
-        ylo, yhi = self._tf(self.lo), self._tf(self.hi)
-        span = yhi - ylo
-        x = f"CAST({expr} AS DOUBLE)"
-        y = self.fwd_sql(x)
-        return (
-            f"CASE WHEN {x} IS NULL OR isnan({x}) OR ({y}) IS NULL "
-            f"OR isnan({y}) THEN {n} "
-            f"WHEN {y} < {flit(ylo)} THEN -1 "
-            f"WHEN {y} >= {flit(yhi)} THEN {n} "
-            f"ELSE LEAST(CAST(FLOOR(({y} - {flit(ylo)}) * {flit(float(n))} "
-            f"/ {flit(span)}) AS INT), {n - 1}) END"
-        )
+        return f"{x} IS NULL OR isnan({x}) OR {y} IS NULL OR isnan({y})"
 
     def to_dict(self) -> dict:
         return {
@@ -905,34 +792,19 @@ class Variable(BinSpec):
         if not _numeric_ok(dt):
             raise TypeError(f"Variable axis needs a numeric column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.binary:
-            return _bsearch_id_col(c, self.edges_)
-        return _search_id_col(c, self.edges_)
+    def raw_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        return _search_id_sql(expr, self.edges_, dialect, binary=self.binary)
 
-    def raw_id_col_kept(self, c: Column) -> Column:
-        if self.binary:
-            # kept rows satisfy e0 <= x < e_n — the search precondition
-            return _bsearch_core(c, self.edges_)
-        return _search_id_col_kept(c, self.edges_)
-
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == -1 and hi_id == self.n:
-            return None
-        if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
-        # both scan variants compare x against the edges directly, so
-        # id ∈ [0, n-1] ⟺ e0 <= x < e_n; NULL and NaN both fail the range
-        x = c.cast("double")
-        return (x >= F.lit(float(self.edges_[0]))) & (
-            x < F.lit(float(self.edges_[-1]))
+    def kept_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        # kept rows satisfy e0 <= x < e_n — the search precondition
+        return _search_id_sql(
+            expr, self.edges_, dialect, kept=True, binary=self.binary
         )
 
-    def raw_id_sql(self, expr: str) -> str:
-        if self.binary:
-            return _bsearch_id_sql(expr, self.edges_)
-        return _search_id_sql(expr, self.edges_)
+    def _keep_core_sql(self, expr: str, dialect: str) -> str:
+        # both scan variants compare x against the edges directly, so
+        # id ∈ [0, n-1] ⟺ e0 <= x < e_n
+        return _range_sql(_dbl(expr), self.edges_[0], self.edges_[-1])
 
     def to_dict(self) -> dict:
         return {
@@ -999,36 +871,22 @@ class Integer(BinSpec):
         if not _integral_ok(dt):
             raise TypeError(f"Integer axis needs an integral/boolean column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        x = c.cast("bigint")
-        return (
-            F.when(x.isNull(), F.lit(self.n))
-            .when(x < F.lit(self.lo), F.lit(-1))
-            .when(x >= F.lit(self.hi), F.lit(self.n))
-            .otherwise((x - F.lit(self.lo)).cast("int"))
-        )
-
-    def raw_id_col_kept(self, c: Column) -> Column:
-        # kept rows are non-null with lo <= x < hi
-        return (c.cast("bigint") - F.lit(self.lo)).cast("int")
-
-    def raw_id_sql(self, expr: str) -> str:
+    def raw_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
         x = f"CAST({expr} AS BIGINT)"
         return (
             f"CASE WHEN {x} IS NULL THEN {self.n} "
             f"WHEN {x} < {self.lo} THEN -1 "
             f"WHEN {x} >= {self.hi} THEN {self.n} "
-            f"ELSE CAST({x} - {self.lo} AS INT) END"
+            f"ELSE {self.kept_id_sql(expr, dialect)} END"
         )
 
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == -1 and hi_id == self.n:
-            return None
-        if (lo_id, hi_id) != (0, self.n - 1):
-            return super().keep_pred_col(c, flow)
-        x = c.cast("bigint")
-        return (x >= F.lit(int(self.lo))) & (x < F.lit(int(self.hi)))
+    def kept_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        # kept rows are non-null with lo <= x < hi
+        return f"CAST(CAST({expr} AS BIGINT) - {self.lo} AS INT)"
+
+    def _keep_core_sql(self, expr: str, dialect: str) -> str:
+        x = f"CAST({expr} AS BIGINT)"
+        return f"{x} >= {int(self.lo)} AND {x} < {int(self.hi)}"
 
     def to_dict(self) -> dict:
         return {
@@ -1041,8 +899,58 @@ class Integer(BinSpec):
         }
 
 
+class _CategoryAxis(BinSpec):
+    """Bucketize shared by IntCategory and StrCategory: the id is the
+    category's position, NULL and misses land in overflow."""
+
+    growth: bool
+
+    def _value_and_lits(self, expr: str, dialect: str) -> tuple[str, list[str]]:
+        """(typed value SQL, category literal SQL in bin order)."""
+        raise NotImplementedError
+
+    def _checked(self, expr: str, dialect: str) -> tuple[str, list[str]]:
+        if self.growth:
+            raise ValueError(
+                "unresolved growth axis — pass it through histogram()/"
+                "resolve_specs, which discovers the categories first"
+            )
+        return self._value_and_lits(expr, dialect)
+
+    def raw_id_sql(self, expr: str, dialect: str = DUCKDB) -> str:
+        x, lits = self._checked(expr, dialect)
+        n = self.n
+        if n <= _CAT_CASE_MAX:
+            # small sets: a codegen'd CASE chain of direct equality
+            # compares (measured ~1.5× faster per row than array_position's
+            # generic array machinery); a NULL value makes every equality
+            # NULL → falls through to overflow
+            whens = " ".join(f"WHEN {x} = {v} THEN {i}" for i, v in enumerate(lits))
+            return f"CAST(CASE {whens} ELSE {n} END AS INT)"
+        pos = _list_sql("position", lits, x, dialect)
+        return (
+            f"CASE WHEN {x} IS NULL THEN {n} "
+            f"WHEN {pos} > 0 THEN CAST({pos} - 1 AS INT) ELSE {n} END"
+        )
+
+    def _raw_id_min(self) -> int:
+        return 0
+
+    def _keep_core_sql(self, expr: str, dialect: str) -> str:
+        # category membership (NULL/miss → overflow → dropped)
+        x, lits = self._checked(expr, dialect)
+        if self.n > _CAT_CASE_MAX:
+            return _list_sql("contains", lits, x, dialect)
+        # left-deep OR chain: a flat ``a OR b OR c`` parses into a balanced
+        # tree in Spark, a different (equivalent) predicate shape
+        pred = f"{x} = {lits[0]}"
+        for v in lits[1:]:
+            pred = f"({pred}) OR {x} = {v}"
+        return pred
+
+
 @dataclass(frozen=True)
-class IntCategory(BinSpec):
+class IntCategory(_CategoryAxis):
     """Explicit unordered integer categories; misses land in the overflow bin.
     Category axes have no underflow (boost semantics, core.py:554-568).
 
@@ -1090,60 +998,8 @@ class IntCategory(BinSpec):
         if not _integral_ok(dt):
             raise TypeError(f"IntCategory axis needs an integral column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.growth:
-            raise ValueError(
-                "unresolved growth axis — pass it through histogram()/"
-                "resolve_specs, which discovers the categories first"
-            )
-        x = c.cast("bigint")
-        if self.n <= _CAT_CASE_MAX:
-            # small sets: a codegen'd when-chain of direct equality compares
-            # (measured ~1.5× faster per row than array_position's generic
-            # array machinery); ids identical by construction
-            expr = None
-            for i, v in enumerate(self.categories):
-                cond = x == F.lit(int(v))
-                expr = (
-                    F.when(cond, F.lit(i)) if expr is None
-                    else expr.when(cond, F.lit(i))
-                )
-            return expr.otherwise(F.lit(self.n)).cast("int")
-        arr = F.array(*[F.lit(int(v)) for v in self.categories])
-        pos = F.array_position(arr, x)  # 1-based, 0 if absent
-        return (
-            F.when(x.isNull(), F.lit(self.n))
-            .when(pos > 0, (pos - 1).cast("int"))
-            .otherwise(F.lit(self.n))
-        )
-
-    def raw_id_sql(self, expr: str) -> str:
-        x = f"CAST({expr} AS BIGINT)"
-        lst = "[" + ", ".join(str(int(v)) for v in self.categories) + "]"
-        pos = f"COALESCE(list_position({lst}, {x}), 0)"
-        return (
-            f"CASE WHEN {x} IS NULL THEN {self.n} "
-            f"WHEN {pos} > 0 THEN CAST({pos} - 1 AS INT) "
-            f"ELSE {self.n} END"
-        )
-
-    def _raw_id_min(self) -> int:
-        return 0
-
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == 0 and hi_id == self.n:
-            return None
-        # flow=False: keep = category membership (NULL/miss → overflow → drop)
-        if self.n <= _CAT_CASE_MAX:
-            x = c.cast("bigint")
-            preds = [x == F.lit(int(v)) for v in self.categories]
-            out = preds[0]
-            for pr in preds[1:]:
-                out = out | pr
-            return out
-        arr = F.array(*[F.lit(int(v)) for v in self.categories])
-        return F.array_contains(arr, c.cast("bigint"))
+    def _value_and_lits(self, expr: str, dialect: str) -> tuple[str, list[str]]:
+        return f"CAST({expr} AS BIGINT)", [str(int(v)) for v in self.categories]
 
     def to_dict(self) -> dict:
         if self.growth:
@@ -1153,7 +1009,7 @@ class IntCategory(BinSpec):
 
 
 @dataclass(frozen=True)
-class StrCategory(BinSpec):
+class StrCategory(_CategoryAxis):
     """Explicit string categories; misses land in overflow, labelled
     ``"_flow_bin"`` (core.py:570-575).  ``growth=True``: the reference's
     growing-category spelling — see IntCategory."""
@@ -1192,55 +1048,8 @@ class StrCategory(BinSpec):
         if not isinstance(dt, T.StringType):
             raise TypeError(f"StrCategory axis needs a string column, got {col}: {dt}")
 
-    def raw_id_col(self, c: Column) -> Column:
-        if self.growth:
-            raise ValueError(
-                "unresolved growth axis — pass it through histogram()/"
-                "resolve_specs, which discovers the categories first"
-            )
-        if self.n <= _CAT_CASE_MAX:
-            # direct-equality when-chain (see _CAT_CASE_MAX); a NULL value
-            # makes every equality NULL → falls through to overflow
-            expr = None
-            for i, v in enumerate(self.categories):
-                cond = c == F.lit(v)
-                expr = (
-                    F.when(cond, F.lit(i)) if expr is None
-                    else expr.when(cond, F.lit(i))
-                )
-            return expr.otherwise(F.lit(self.n)).cast("int")
-        arr = F.array(*[F.lit(v) for v in self.categories])
-        pos = F.array_position(arr, c)
-        return (
-            F.when(c.isNull(), F.lit(self.n))
-            .when(pos > 0, (pos - 1).cast("int"))
-            .otherwise(F.lit(self.n))
-        )
-
-    def raw_id_sql(self, expr: str) -> str:
-        lst = "[" + ", ".join(slit(v) for v in self.categories) + "]"
-        pos = f"COALESCE(list_position({lst}, {expr}), 0)"
-        return (
-            f"CASE WHEN {expr} IS NULL THEN {self.n} "
-            f"WHEN {pos} > 0 THEN CAST({pos} - 1 AS INT) "
-            f"ELSE {self.n} END"
-        )
-
-    def _raw_id_min(self) -> int:
-        return 0
-
-    def keep_pred_col(self, c: Column, flow: bool) -> Optional[Column]:
-        lo_id, hi_id = self.keep_range(flow)
-        if lo_id == 0 and hi_id == self.n:
-            return None
-        if self.n <= _CAT_CASE_MAX:
-            preds = [c == F.lit(v) for v in self.categories]
-            out = preds[0]
-            for pr in preds[1:]:
-                out = out | pr
-            return out
-        arr = F.array(*[F.lit(v) for v in self.categories])
-        return F.array_contains(arr, c)
+    def _value_and_lits(self, expr: str, dialect: str) -> tuple[str, list[str]]:
+        return expr, [slit(v, dialect) for v in self.categories]
 
     def to_dict(self) -> dict:
         if self.growth:

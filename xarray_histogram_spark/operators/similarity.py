@@ -727,7 +727,7 @@ def kmeans_refine(
     The reason ivf_assign skips k-means — iterative float training cannot
     be mirrored bit-exactly — is dissolved by the engine's two standing
     determinism tools: per-component **int64 quantization**
-    (``scaled_weight_col``; integer sums are addition-order independent, so
+    (``oracle.scaled_weight_sql``; integer sums are addition-order independent, so
     partial aggregation and DuckDB agree bit-for-bit) and the sequential
     **cosine fold** (functions.vectors).  A centroid component is
     ``(Σq / n) / scale`` — three IEEE ops on exact integers, identical in
@@ -787,15 +787,14 @@ def kmeans_refine(
             raise ValueError("kmeans_refine: cannot infer dim (empty input?)")
         dim = int(probe["d"])
 
-    from ..plans.histogram import scaled_weight_col
+    from ..oracle import scaled_weight_sql
+    from ..plans.histogram import sql_ident
 
     def _sums(assigned: DataFrame) -> DataFrame:
         qs = [
-            F.sum(
-                scaled_weight_col(
-                    F.element_at(F.col(vec_col), d + 1).cast("double"), scale
-                )
-            ).alias(f"__s{d}")
+            F.sum(F.expr(scaled_weight_sql(
+                f"element_at({sql_ident(vec_col)}, {d + 1})", scale
+            ))).alias(f"__s{d}")
             for d in range(dim)
         ]
         return assigned.groupBy("cid").agg(
@@ -921,7 +920,7 @@ def quantize_embeddings(
     NULL codes/scale/max_err — a NaN amax would otherwise poison every
     code on Spark (NaN >= 0 is true, floor(NaN) → 0) while the DuckDB
     mirror ERRORS on its NaN→INT cast: the same engine divergence
-    ``scaled_weight_col`` guards, applied row-wise here.
+    ``scaled_weight_sql`` guards, applied row-wise here.
 
     Returns (id, codes array<tinyint>, scale, max_err) where ``max_err``
     is the max absolute reconstruction error ``|x_i - code_i·scale|``.

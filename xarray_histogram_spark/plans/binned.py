@@ -11,7 +11,7 @@ so everything in SCALE.md's contraction analysis applies unchanged.
 
 Determinism (oracle-gated): ``count`` is an int64 count; ``sum`` and
 ``mean`` run on the exact-int64 quantization of ``value·10^scale``
-(``scaled_weight_col`` — identical IEEE ops in DuckDB), so sums are
+(``oracle.scaled_weight_sql`` — the same SQL on both engines), so sums are
 order-independent and ``mean`` is one double division of two exact ints;
 ``min``/``max`` are order-independent by definition.  Empty bins are NULL
 for sum/mean/min/max and 0 for count (matching scipy, whose empty-bin
@@ -27,13 +27,14 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import BinSpec
+from ..binspec import SPARK, BinSpec
 from .histogram import (
     axis_meta_exprs,
     id_col,
     label_col,
-    scaled_weight_col,
     spine_ids_zero,
+    sql_ident,
+    weight_sql,
 )
 
 STATS = ("count", "sum", "mean", "min", "max", "sum_sq", "sample_var")
@@ -72,27 +73,23 @@ def binned_statistic(
     if bad:
         raise ValueError(f"unknown stats {bad}; choose from {STATS}")
     group_by = list(group_by)
-    pred = spec.keep_pred_col(F.col(x), flow)
+    qx = sql_ident(x)
+    pred = spec.keep_sql(qx, flow, SPARK)
     src = df.where(pred) if pred is not None else df
     idc = (
-        spec.raw_id_col_kept(F.col(x))
+        spec.kept_id_sql(qx, SPARK)
         if pred is not None and not flow
-        else spec.raw_id_col(F.col(x))
+        else spec.raw_id_sql(qx, SPARK)
     )
-    v = F.col(value).cast("double")
-    if weight_scale is not None:
-        divisor = float(10**weight_scale)
-        vsum = scaled_weight_col(F.col(value), divisor)
-    else:
-        divisor = 1.0
-        vsum = v
+    v = f"CAST({sql_ident(value)} AS DOUBLE)"
+    vsum, _, divisor = weight_sql(value, weight_scale)
     # sum of squares: in quantized mode q² is an EXACT integer product of
     # the quantized weight with itself (Σq² deterministic; value = Σq²/10^2s;
     # overflow bound (|w|·10^s)²·rows < 2⁶³ — reduce weight_scale for large
     # weights); raw mode sums v·v doubles (fast, order-sensitive).
     # Only materialized when a squared stat is requested.
     need_sq = bool({"sum_sq", "sample_var"} & set(stats))
-    vsq = (vsum * vsum) if weight_scale is not None else (v * v)
+    vsq = f"({vsum}) * ({vsum})" if weight_scale is not None else f"{v} * {v}"
     if weight_scale is not None and need_sq:
         # Σq² must stay inside int64 (Spark would WRAP silently while the
         # DuckDB oracle raises — silent corruption either way).  Worst
@@ -116,12 +113,12 @@ def binned_statistic(
                     f"weight_scale (or weight_scale=None for raw double "
                     f"sums)"
                 )
-    base = src.select(
-        *[F.col(g) for g in group_by],
-        idc.alias(id_col(x)),
-        vsum.alias("__s"),
-        *([vsq.alias("__s2")] if need_sq else []),
-        v.alias("__v"),
+    base = src.selectExpr(
+        *[sql_ident(g) for g in group_by],
+        f"{idc} AS {sql_ident(id_col(x))}",
+        f"{vsum} AS __s",
+        *([f"{vsq} AS __s2"] if need_sq else []),
+        f"{v} AS __v",
     )
     if not group_by:
         # dense by construction: NULL-valued spine rows union in BEFORE the

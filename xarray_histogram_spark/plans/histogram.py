@@ -9,7 +9,9 @@ reference collapses into ``groupBy().agg()`` and Catalyst does the rest
 bucketize arithmetic).
 
 Scale notes (designed for ~100 TB inputs, 1000 executors):
-- Bucketize is pure Column arithmetic → stays in WholeStageCodegen; no UDFs.
+- Bucketize is the BinSpec's SQL text (``raw_id_sql``/``kept_id_sql``/
+  ``keep_sql``, the same text the DuckDB oracle runs) parsed by ``F.expr``/
+  ``selectExpr`` → stays in WholeStageCodegen; no UDFs.
 - The only shuffle is the groupBy on (group_keys, bin_ids); its output is
   tiny (|groups| × extent rows) because histograms compress.
 - The dense spine (cross-product of per-axis bins) is a few-hundred-row
@@ -22,10 +24,11 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
   distributed sum is partitioning-dependent and can never hash-match an
   oracle bit-for-bit.  With ``weight_scale=s`` (default 6) weights are
   quantised to int64 (half-away-from-zero via sign-aware floor — see
-  ``scaled_weight_col``) and summed as integers — exact,
-  order-independent, identical in Spark and DuckDB (int64→double casts are
-  hardware-rounded identically; DuckDB's DECIMAL→DOUBLE cast is NOT
-  correctly rounded, which rules the DECIMAL route out).  The quantisation
+  ``oracle.scaled_weight_sql``, which both engines run) and summed as
+  integers — exact, order-independent, identical in Spark and DuckDB
+  (int64→double casts are hardware-rounded identically; DuckDB's
+  DECIMAL→DOUBLE cast is NOT correctly rounded, which rules the DECIMAL
+  route out).  The quantisation
   (~1e-11 relative on these tables) is the documented price of a
   deterministic gate; ``weight_scale=None`` gives raw double sums for
   production speed (int64 overflow bound: |w|·10^s · rows < 2^63).
@@ -44,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..binspec import Bin, BinSpec, Integer, Regular
+from ..binspec import SPARK, Bin, BinSpec, Integer, Regular, slit
 from .result import HistogramResult
 
 BinsArg = Union[int, BinSpec, Sequence[Union[int, BinSpec]]]
@@ -156,29 +159,27 @@ def resolve_specs(
     return specs
 
 
-def scaled_weight_col(w: Column, divisor: float) -> Column:
-    """Exact-int64 weight quantization: half-away-from-zero rounding of
-    ``w·divisor`` via sign-aware floor — pure IEEE double ops, so Spark,
-    DuckDB (same CASE/FLOOR mirror) and the numpy fill path compute the
-    BIT-IDENTICAL int64 for every input.  ``F.round`` would round the
-    decimal string repr through BigDecimal: subtly different on
-    adversarial doubles AND ~1.8× slower per row (BigDecimal allocation
-    in the hot path).
+def sql_ident(name: str) -> str:
+    """Spark SQL identifier for a top-level column name (any characters)."""
+    return "`" + name.replace("`", "``") + "`"
 
-    NaN weights are treated as NULL (skipped by SUM, zero mass) — the one
-    semantic all three execution paths can share: Spark's NaN ordering
-    would otherwise quietly quantize NaN to 0 through the ``>= 0`` branch
-    while the DuckDB mirror ERRORS on its NaN→BIGINT cast, and the Arrow
-    fill kernel receives Spark NULLs as pandas NaN so it cannot tell the
-    two apart (it already skips both).  Raw-double mode
-    (``weight_scale=None``) keeps IEEE semantics (NaN poisons the sum)."""
-    x = w.cast("double") * F.lit(divisor)
-    return (
-        F.when(F.isnan(x), F.lit(None))
-        .when(x >= 0, F.floor(x + F.lit(0.5)))
-        .otherwise(-F.floor(-x + F.lit(0.5)))
-        .cast("bigint")
-    )
+
+def weight_sql(
+    weights: Optional[str], weight_scale: Optional[int]
+) -> tuple[Optional[str], bool, float]:
+    """Per-row aggregate value as (SQL, int_mode, divisor).  Unweighted:
+    no value at all (the aggregate is COUNT(*)).  With ``weight_scale``:
+    the exact-int64 quantization of ``w·10^scale`` the DuckDB oracle runs
+    too (``scaled_weight_sql``) — int_mode, an integer sum that is
+    order-independent.  Otherwise the raw double."""
+    from ..oracle import scaled_weight_sql
+
+    if weights is None:
+        return None, True, 1.0
+    if weight_scale is None:
+        return f"CAST({sql_ident(weights)} AS DOUBLE)", False, 1.0
+    divisor = float(10**weight_scale)
+    return scaled_weight_sql(sql_ident(weights), divisor), True, divisor
 
 
 def spark_lit(v, typ: str) -> str:
@@ -193,7 +194,19 @@ def spark_lit(v, typ: str) -> str:
         return f"CAST({int(v)} AS BIGINT)"
     if typ == "boolean":
         return "true" if v else "false"
-    return "'" + str(v).replace("'", "''") + "'"
+    return slit(str(v), SPARK)
+
+
+def _bin_fields(var: str, spec: BinSpec, b: Bin) -> list[str]:
+    """``named_struct`` name/value pairs of one bin's spine row."""
+    fields = {
+        id_col(var): f"CAST({b.id} AS INT)",
+        label_col(var): spark_lit(b.label, spec.label_type),
+        f"__{var}_width": spark_lit(b.width, "double"),
+        f"__{var}_center": spark_lit(b.center, "double"),
+        f"__{var}_is_flow": spark_lit(b.is_flow, "boolean"),
+    }
+    return [f"{slit(k, SPARK)}, {v}" for k, v in fields.items()]
 
 
 def spine_df(spark: SparkSession, var: str, spec: BinSpec, flow: bool) -> DataFrame:
@@ -206,12 +219,7 @@ def spine_df(spark: SparkSession, var: str, spec: BinSpec, flow: bool) -> DataFr
     round-trip through a Python RDD and cost seconds of Python-worker
     startup per query, serially, for a few dozen constant rows."""
     rows = ", ".join(
-        "named_struct("
-        f"'{id_col(var)}', CAST({b.id} AS INT), "
-        f"'{label_col(var)}', {spark_lit(b.label, spec.label_type)}, "
-        f"'__{var}_width', {spark_lit(b.width, 'double')}, "
-        f"'__{var}_center', {spark_lit(b.center, 'double')}, "
-        f"'__{var}_is_flow', {'true' if b.is_flow else 'false'})"
+        "named_struct(" + ", ".join(_bin_fields(var, spec, b)) + ")"
         for b in spec.bins(flow)
     )
     # one selectExpr round trip instead of hundreds of py4j lit() calls —
@@ -241,9 +249,14 @@ def spine_ids_zero(
     df = spark.range(1)
     for c, s in zip(cols, specs):
         lo, hi = _axis_id_range(s, flow)
-        df = df.selectExpr("*", f"explode(sequence({lo}, {hi})) AS __seq_{c}")
+        df = df.selectExpr(
+            "*", f"explode(sequence({lo}, {hi})) AS {sql_ident('__seq_' + c)}"
+        )
     return df.selectExpr(
-        *[f"CAST(__seq_{c} AS INT) AS {id_col(c)}" for c in cols],
+        *[
+            f"CAST({sql_ident('__seq_' + c)} AS INT) AS {sql_ident(id_col(c))}"
+            for c in cols
+        ],
         f"{zero_sql} AS {val_name}",
     )
 
@@ -255,16 +268,16 @@ def axis_meta_exprs(var: str, spec: BinSpec, flow: bool) -> list[str]:
     (core.py:524-587) without any join."""
     bins = spec.bins(flow)
     lo, _ = _axis_id_range(spec, flow)
-    idx = f"({id_col(var)} + {1 - lo})"
+    idx = f"({sql_ident(id_col(var))} + {1 - lo})"
     labels = ", ".join(spark_lit(b.label, spec.label_type) for b in bins)
     widths = ", ".join(spark_lit(b.width, "double") for b in bins)
     centers = ", ".join(spark_lit(b.center, "double") for b in bins)
     flows = ", ".join(spark_lit(b.is_flow, "boolean") for b in bins)
     return [
-        f"element_at(array({labels}), {idx}) AS {label_col(var)}",
-        f"element_at(array({widths}), {idx}) AS __{var}_width",
-        f"element_at(array({centers}), {idx}) AS __{var}_center",
-        f"element_at(array({flows}), {idx}) AS __{var}_is_flow",
+        f"element_at(array({labels}), {idx}) AS {sql_ident(label_col(var))}",
+        f"element_at(array({widths}), {idx}) AS {sql_ident(f'__{var}_width')}",
+        f"element_at(array({centers}), {idx}) AS {sql_ident(f'__{var}_center')}",
+        f"element_at(array({flows}), {idx}) AS {sql_ident(f'__{var}_is_flow')}",
     ]
 
 
@@ -338,51 +351,35 @@ def histogramdd(
         for c, s in zip(cols, specs)
     ]
 
-    # keep filter FIRST, on the raw values (keep_pred_col): pushed into the
+    # keep filter FIRST, on the raw values (keep_sql): pushed into the
     # scan, and the bucketize CASE below is then evaluated exactly once per
     # row — an id-range filter would be pushdown-substituted into both
-    # BETWEEN bounds, tripling the bucketize work per row
-    if preserve_groups and group_by:
-        preds = []  # aggregate flow ids too; dense fill drops them but the
-        # group's spine rows survive (reference loop-slice semantics)
-    else:
-        preds = [
-            p
-            for c, s in zip(cols, specs)
-            if (p := s.keep_pred_col(F.col(c), flow)) is not None
-        ]
-    src = df.where(reduce(lambda a, b: a & b, preds)) if preds else df
+    # range bounds, tripling the bucketize work per row
+    qcols = [sql_ident(c) for c in cols]
+    keeps = [s.keep_sql(q, flow, SPARK) for q, s in zip(qcols, specs)]
+    # preserve_groups: aggregate flow ids too; dense fill drops them but
+    # the group's spine rows survive (reference loop-slice semantics)
+    kept_ok = not (preserve_groups and group_by)
+    preds = [p for p in keeps if p is not None] if kept_ok else []
+    src = df.where(" AND ".join(f"({p})" for p in preds)) if preds else df
 
-    # bucketize: raw bin ids, codegen'd expressions.
     # int_mode: the per-row value is an exact int64 (1, or a scaled-int
     # weight) and the aggregate is an integer sum — order-independent, the
-    # oracle-deterministic representation.
-    if weights is not None:
-        if weight_scale is not None:
-            divisor = float(10**weight_scale)
-            vsrc = scaled_weight_col(F.col(weights), divisor)
-            int_mode = True
-        else:
-            vsrc = F.col(weights).cast("double")
-            int_mode, divisor = False, 1.0
-    else:
-        # unweighted: no value column AT ALL — the aggregate is COUNT(*)
-        # (measured ~20% cheaper per row than SUM of a literal-1 column at
-        # 1e7 rows, and the shuffle rows narrow to the key alone).  The
-        # dense spine then contributes exactly ONE row per bin, corrected
-        # by a post-aggregate −1 (below).
-        vsrc = None
-        int_mode, divisor = True, 1.0
+    # oracle-deterministic representation.  Unweighted: no value column
+    # AT ALL — COUNT(*) is measured ~20% cheaper per row than SUM of a
+    # literal-1 column at 1e7 rows, and the shuffle rows narrow to the key
+    # alone; the dense spine then contributes exactly ONE row per bin,
+    # corrected by a post-aggregate −1 (below).
+    vsrc, int_mode, divisor = weight_sql(weights, weight_scale)
 
     # per-axis bin-id expressions; when the axis's keep filter is applied
-    # (flow off, pred pushed to the scan) the kept-fast variant drops the
+    # (flow off, pred pushed to the scan) the kept variant drops the
     # NULL/NaN/flow CASE wrapper — identical ids, bare arithmetic per row
-    kept_ok = not (preserve_groups and group_by) and not flow
     id_exprs = [
-        s.raw_id_col_kept(F.col(c))
-        if kept_ok and s.keep_pred_col(F.col(c), flow) is not None
-        else s.raw_id_col(F.col(c))
-        for c, s in zip(cols, specs)
+        s.kept_id_sql(q, SPARK)
+        if kept_ok and not flow and p is not None
+        else s.raw_id_sql(q, SPARK)
+        for q, s, p in zip(qcols, specs, keeps)
     ]
 
     keys = group_by + [id_col(c) for c in cols]
@@ -400,6 +397,8 @@ def histogramdd(
             "fewer variables together"
         )
     multi = len(cols) > 1
+    groups = [sql_ident(g) for g in group_by]
+    vcols = [f"{vsrc} AS __v"] if vsrc is not None else []
     if multi:
         # flatten the k bin ids into ONE bigint grouping key
         # (Σ (id_i+1)·stride_i — injective, ids live in [-1, n_i]): the
@@ -410,23 +409,24 @@ def histogramdd(
         strides = [1] * len(specs)
         for i in range(len(specs) - 2, -1, -1):
             strides[i] = strides[i + 1] * (specs[i + 1].n + 2)
-        fk = reduce(
-            lambda a, b: a + b,
-            [
-                (e.cast("bigint") + F.lit(1)) * F.lit(st)
-                for e, st in zip(id_exprs, strides)
-            ],
-        )
-    vcols = [vsrc.alias("__v")] if vsrc is not None else []
-    if multi:
-        base = src.select(
-            *[F.col(g) for g in group_by], fk.alias("__fk"), *vcols
+
+        def flat_key(ids: Sequence[str]) -> str:
+            return " + ".join(
+                f"(CAST({e} AS BIGINT) + 1) * {st}"
+                for e, st in zip(ids, strides)
+            )
+
+        base = src.selectExpr(
+            *groups, f"{flat_key(id_exprs)} AS __fk", *vcols
         )
         agg_keys = group_by + ["__fk"]
     else:
-        base = src.select(
-            *[F.col(g) for g in group_by],
-            *[e.alias(id_col(c)) for c, e in zip(cols, id_exprs)],
+        base = src.selectExpr(
+            *groups,
+            *[
+                f"{e} AS {sql_ident(id_col(c))}"
+                for c, e in zip(cols, id_exprs)
+            ],
             *vcols,
         )
         agg_keys = keys
@@ -438,15 +438,9 @@ def histogramdd(
         # per execution), one exchange of ≤ extent rows.
         spine0 = spine_ids_zero(spark, cols, specs, flow, zero_sql)
         if multi:
-            spine0 = spine0.select(
-                reduce(
-                    lambda a, b: a + b,
-                    [
-                        (F.col(id_col(c)).cast("bigint") + F.lit(1)) * F.lit(st)
-                        for c, st in zip(cols, strides)
-                    ],
-                ).alias("__fk"),
-                F.col("__v"),
+            spine0 = spine0.selectExpr(
+                f"{flat_key([sql_ident(id_col(c)) for c in cols])} AS __fk",
+                "__v",
             )
         if vsrc is None:
             spine0 = spine0.drop("__v")
@@ -503,8 +497,7 @@ def finish_from_agg(
     sparse_ok: bool = True,
 ) -> HistogramResult:
     """Shared finish stage: sparse (group, bin-ids, __val) aggregate →
-    dense labelled result.  Used by both the pure-Column path and the
-    Arrow/numpy fill path (plans.fast_fill) — identical output.
+    dense labelled result.
 
     ``sparse_ok``: whether downstream statistics may read the sparse
     aggregate directly instead of the dense result.  The fast path is
@@ -519,7 +512,7 @@ def finish_from_agg(
     - Ungrouped: if the caller pre-densified (``dense=True`` — the spine
       zeros were unioned in before the aggregation), the aggregate is
       already one row per spine bin; otherwise union a zero spine here and
-      re-aggregate (≤ 2·extent rows — the Arrow-fill path).  Either way the
+      re-aggregate (≤ 2·extent rows — result algebra).  Either way the
       bin labels/widths/centers attach as O(1) literal-array lookups on the
       id, so NO join and NO broadcast of a computed aggregate appears in
       the ungrouped plan at all.
@@ -586,17 +579,7 @@ def finish_from_agg(
                 k = sum((b.id + 1) * st for b, st in zip(combo, strides))
                 fields = [f"'__k', CAST({k} AS BIGINT)"]
                 for c, s, b in zip(cols, specs, combo):
-                    fields.append(f"'{id_col(c)}', CAST({b.id} AS INT)")
-                    fields.append(
-                        f"'{label_col(c)}', {spark_lit(b.label, s.label_type)}"
-                    )
-                    fields.append(f"'__{c}_width', {spark_lit(b.width, 'double')}")
-                    fields.append(
-                        f"'__{c}_center', {spark_lit(b.center, 'double')}"
-                    )
-                    fields.append(
-                        f"'__{c}_is_flow', {'true' if b.is_flow else 'false'}"
-                    )
+                    fields += _bin_fields(c, s, b)
                 entries.append("named_struct(" + ", ".join(fields) + ")")
             expanded = packed.selectExpr(
                 "*", f"inline(array({', '.join(entries)}))"
@@ -639,7 +622,7 @@ def finish_from_agg(
         # column order: ids, labels, __val, widths, centers, is_flow
         per_axis = [axis_meta_exprs(c, s, flow) for c, s in zip(cols, specs)]
         filled = dense_agg.selectExpr(
-            *ids,
+            *[sql_ident(i) for i in ids],
             *[a[0] for a in per_axis],
             "__val",
             *[a[1] for a in per_axis],
@@ -768,21 +751,19 @@ def histogram_columns(
             raise ValueError(f"column {c!r} not in DataFrame")
         spec.validate_dtype(schema[c], c)
 
-    if weights is not None:
-        if weight_scale is not None:
-            divisor = float(10**weight_scale)
-            def vsrc():
-                return scaled_weight_col(F.col(weights), divisor)
-            int_mode = True
-        else:
-            def vsrc():
-                return F.col(weights).cast("double")
-            int_mode, divisor = False, 1.0
-    else:
-        # unweighted → COUNT(*) with spine −1 correction, as in histogramdd
-        vsrc = None
-        int_mode, divisor = True, 1.0
+    # unweighted → COUNT(*) with spine −1 correction, as in histogramdd
+    vsrc, int_mode, divisor = weight_sql(weights, weight_scale)
     zero_sql = "CAST(0 AS BIGINT)" if int_mode else "CAST(0.0 AS DOUBLE)"
+    vcols = [f"{vsrc} AS __v"] if vsrc is not None else []
+
+    def bucketize(frame: DataFrame, x: str) -> tuple[DataFrame, str]:
+        """Pushed keep filter on value expression ``x``, and the bin id of
+        the rows it keeps (the bare kept form when flow bins are off)."""
+        pred = spec.keep_sql(x, flow, SPARK)
+        if pred is None:
+            return frame, spec.raw_id_sql(x, SPARK)
+        idc = spec.raw_id_sql(x, SPARK) if flow else spec.kept_id_sql(x, SPARK)
+        return frame.where(pred), idc
 
     bin_id = id_col(var_name)
     # flat (column-index, bin) grouping key: __d·(n+2) + id + 1 — one
@@ -790,7 +771,7 @@ def histogram_columns(
     # div/mod post-agg (≤ k·extent rows).
     width = spec.n + 2
     # one generated (pos, value) row per (input row, column): the array
-    # elements share one Spark type — the exact type every raw_id_col
+    # elements share one Spark type — the exact type every raw_id_sql
     # variant casts its input to first, so pre-casting is a no-op in the
     # id arithmetic and the ids match a per-column evaluation bit-for-bit
     from ..binspec import Integer as _Int, IntCategory as _IC, StrCategory as _SC
@@ -806,20 +787,10 @@ def histogram_columns(
         # in as a literal
         branches = []
         for kk, c in enumerate(cols):
-            pred = spec.keep_pred_col(F.col(c), flow)
-            b = df.where(pred) if pred is not None else df
-            idc = (
-                spec.raw_id_col_kept(F.col(c))
-                if pred is not None and not flow
-                else spec.raw_id_col(F.col(c))
-            )
-            fkc = (idc.cast("bigint") + F.lit(1) + F.lit(kk * width)).alias(
-                "__fk"
-            )
-            branches.append(
-                b.select(fkc) if vsrc is None
-                else b.select(fkc, vsrc().alias("__v"))
-            )
+            b, idc = bucketize(df, sql_ident(c))
+            branches.append(b.selectExpr(
+                f"CAST({idc} AS BIGINT) + 1 + {kk * width} AS __fk", *vcols
+            ))
         data = reduce(lambda a, b: a.unionByName(b), branches)
     else:
         arr = F.array(*[F.col(c).cast(elem_t) for c in cols])
@@ -827,21 +798,11 @@ def histogram_columns(
         gen = df.select(
             *extra, F.posexplode(arr).alias("__d", "__x")
         )
-        pred = spec.keep_pred_col(F.col("__x"), flow)
-        if pred is not None:
-            gen = gen.where(pred)
-        idc = (
-            spec.raw_id_col_kept(F.col("__x"))
-            if pred is not None and not flow
-            else spec.raw_id_col(F.col("__x"))
-        )
-        fkc = (
-            F.col("__d").cast("bigint") * F.lit(width)
-            + idc.cast("bigint") + F.lit(1)
-        ).alias("__fk")
-        data = (
-            gen.select(fkc) if vsrc is None
-            else gen.select(fkc, vsrc().alias("__v"))
+        gen, idc = bucketize(gen, "__x")
+        data = gen.selectExpr(
+            f"CAST(__d AS BIGINT) * {width} + CAST({idc} AS BIGINT) + 1 "
+            "AS __fk",
+            *vcols,
         )
     lo_id, hi_id = _axis_id_range(spec, flow)
     k = len(cols)
@@ -874,8 +835,8 @@ def histogram_columns(
     dim_labels = ", ".join(spark_lit(c, "string") for c in cols)
     per_axis = axis_meta_exprs(var_name, spec, flow)
     filled = agg.selectExpr(
-        f"element_at(array({dim_labels}), __d + 1) AS {dim_name}",
-        bin_id,
+        f"element_at(array({dim_labels}), __d + 1) AS {sql_ident(dim_name)}",
+        sql_ident(bin_id),
         per_axis[0],
         "__val",
         per_axis[1],

@@ -23,8 +23,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import BinSpec
-from .histogram import id_col, scaled_weight_col
+from ..binspec import SPARK, BinSpec
+from .histogram import id_col, sql_ident
 
 
 def _group_sets(group_by: list[str], cube: bool) -> list[list[str]]:
@@ -84,29 +84,25 @@ def rollup_histogramdd(
         raise ValueError("rollup_histogramdd needs at least one group column")
     if len(cols) != len(specs):
         raise ValueError("cols/specs length mismatch")
-    bids = [
-        s.raw_id_col(F.col(c)).alias(id_col(c)) for c, s in zip(cols, specs)
-    ]
-    preds = [
-        p
-        for c, s in zip(cols, specs)
-        if (p := s.keep_pred_col(F.col(c), flow)) is not None
-    ]
+    from ..oracle import scaled_weight_sql
+
     src = df
-    for p in preds:
-        src = src.where(p)
-    proj = [F.col(g) for g in group_by] + bids
+    for c, s in zip(cols, specs):
+        if (p := s.keep_sql(sql_ident(c), flow, SPARK)) is not None:
+            src = src.where(p)
+    proj = [sql_ident(g) for g in group_by] + [
+        f"{s.raw_id_sql(sql_ident(c), SPARK)} AS {sql_ident(id_col(c))}"
+        for c, s in zip(cols, specs)
+    ]
     if weights is not None:
-        proj.append(F.col(weights).alias("__w"))
-    base = src.select(*proj)
+        proj.append(f"{sql_ident(weights)} AS __w")
+    base = src.selectExpr(*proj)
     if weights is None:
         val = F.count(F.lit(1)).cast("bigint")
     elif weight_scale is not None:
         s = float(10**weight_scale)
-        val = (
-            F.sum(scaled_weight_col(F.col("__w"), s))
-            .cast("double") / F.lit(s)
-        )
+        q = F.expr(scaled_weight_sql("__w", s))
+        val = F.sum(q).cast("double") / F.lit(s)
     else:
         val = F.sum(F.col("__w").cast("double"))
     idc = [F.col(id_col(c)) for c in cols]
@@ -137,6 +133,7 @@ def rollup_histogramdd_sql(
     weight_scale: int | None = 6,
 ) -> str:
     from ..binspec import flit
+    from ..oracle import scaled_weight_sql
 
     cols = list(cols)
     specs = list(specs)
@@ -155,7 +152,6 @@ def rollup_histogramdd_sql(
         val = "CAST(COUNT(*) AS BIGINT)"
     elif weight_scale is not None:
         sc = flit(float(10**weight_scale))
-        from ..oracle import scaled_weight_sql
         # CAST(SUM(...) AS BIGINT) BEFORE the double cast: DuckDB's
         # SUM(BIGINT) is HUGEINT, whose direct cast to DOUBLE rounds
         # differently from Spark's int64 sum for |sum| > 2^53 (and never

@@ -27,8 +27,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import BinSpec
-from ..plans.histogram import id_col, label_col, scaled_weight_col, spine_df
+from ..binspec import SPARK, BinSpec
+from ..plans.histogram import id_col, label_col, spark_lit, spine_df, sql_ident
 
 
 def streaming_histogram(
@@ -59,8 +59,8 @@ def streaming_histogram(
         if slide
         else F.window(ts_col, window_duration)
     )
-    bin_id = spec.raw_id_col(F.col(col)).alias(id_col(col))
-    pred = spec.keep_pred_col(F.col(col), flow)
+    bin_id = F.expr(spec.raw_id_sql(sql_ident(col), SPARK)).alias(id_col(col))
+    pred = spec.keep_sql(sql_ident(col), flow, SPARK)
     if pred is not None:
         sdf = sdf.where(pred)
     base = sdf.select(
@@ -71,11 +71,12 @@ def streaming_histogram(
     )
     if weights is not None:
         if weight_scale is not None:
+            from ..oracle import scaled_weight_sql
+
+            scale = float(10**weight_scale)
             val = (
-                F.sum(
-                    scaled_weight_col(F.col("__wt"), float(10**weight_scale))
-                ).cast("double")
-                / F.lit(float(10**weight_scale))
+                F.sum(F.expr(scaled_weight_sql("__wt", scale))).cast("double")
+                / F.lit(scale)
             )
         else:
             val = F.sum(F.col("__wt").cast("double"))
@@ -145,13 +146,13 @@ def session_histogram(
     group_by = list(group_by)
     if sdf.isStreaming:
         sdf = sdf.withWatermark(ts_col, watermark)
-    pred = spec.keep_pred_col(F.col(col), flow)
+    pred = spec.keep_sql(sql_ident(col), flow, SPARK)
     if pred is not None:
         sdf = sdf.where(pred)
     base = sdf.select(
         F.session_window(F.col(ts_col), gap).alias("__w"),
         *[F.col(g) for g in group_by],
-        spec.raw_id_col(F.col(col)).alias(id_col(col)),
+        F.expr(spec.raw_id_sql(sql_ident(col), SPARK)).alias(id_col(col)),
     )
     agg = base.groupBy("__w", *group_by).agg(
         F.collect_list(F.col(id_col(col))).alias("__bins")
@@ -160,7 +161,7 @@ def session_histogram(
         *[
             F.struct(
                 F.lit(b.id).alias("id"),
-                spec.label_lit(b.label).alias("label"),
+                F.expr(spark_lit(b.label, spec.label_type)).alias("label"),
                 F.size(
                     F.filter(F.col("__bins"), lambda x: x == F.lit(b.id))
                 ).cast("bigint").alias("count"),

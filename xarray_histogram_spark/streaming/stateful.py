@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..binspec import BinSpec
-from ..plans.histogram import id_col, label_col, value_col_name
+from ..binspec import SPARK, BinSpec
+from ..plans.histogram import id_col, label_col, sql_ident, value_col_name
 
 
 def stateful_cumulative_histogram(
@@ -107,10 +107,11 @@ def stateful_cumulative_histogram(
             }
         )
 
-    pred = spec.keep_pred_col(F.col(col), flow)
+    pred = spec.keep_sql(sql_ident(col), flow, SPARK)
     src = sdf.where(pred) if pred is not None else sdf
     bucketized = src.select(
-        F.col(key_col), spec.raw_id_col(F.col(col)).alias("__bin")
+        F.col(key_col),
+        F.expr(spec.raw_id_sql(sql_ident(col), SPARK)).alias("__bin"),
     )
     return bucketized.groupBy(key_col).applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
