@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from xarray_histogram_spark import (
+    FLOW_STR,
     IntCategory,
     Integer,
     Regular,
@@ -701,3 +702,15 @@ def test_column_names_needing_quotes(spark, spec, col, flow):
         # repr: a NaN group key compares unequal to itself
         rows = sorted(repr(tuple(r)) for r in got.collect())
         assert rows and rows == sorted(repr(tuple(r)) for r in want.collect())
+    if col == "s":
+        # explicit counts: a mis-escaped literal would send a'b or c\d to
+        # overflow on both sides of the comparison above alike
+        c = names[col]
+        got = {
+            r[f"{c}_bins"]: r[f"{c}_histogram"]
+            for r in histogram(odd, c, spec, flow=flow).df.collect()
+        }
+        want = {"a'b": 2, "c\\d": 2, "e": 1}
+        if flow:
+            want[FLOW_STR] = 2  # NULL and "zz"
+        assert got == want

@@ -272,7 +272,7 @@ def test_scaled_weight_col_matches_numpy_formula(spark, ws):
     .5 ties."""
     import numpy as np
 
-    from xarray_histogram_spark.oracle import scaled_weight_sql
+    from xarray_histogram_spark.binspec import scaled_weight_sql
 
     ws = ws + [0.5e-6, -0.5e-6, 2.5e-6, -2.5e-6]  # exact ties at scale 1e6
     df = spark.createDataFrame([(float(w),) for w in ws], "w: double")

@@ -22,7 +22,7 @@ order and the driver's hash comparison is bit-identical (no transcendentals
 in the hot path — log-transformed axes precompute their edges Python-side
 for the exact path).  The dialects differ only in list literals (category
 lookups above ``_CAT_CASE_MAX``, edge folds above ``_BSEARCH_MAX_BINS`` —
-see ``_list_sql``) and in backslashes inside string literals (``slit``);
+see ``_list_sql``) and in string-literal escapes (``slit``);
 the calling module passes ``dialect``.
 
 Bin-id convention (uniform across the engine):
@@ -69,11 +69,26 @@ def flit(v: float) -> str:
     return f"CAST('{v!r}' AS DOUBLE)"
 
 
+def scaled_weight_sql(expr: str, divisor: float) -> str:
+    """Half-away-from-zero int64 quantization of ``expr·divisor`` via
+    sign-aware FLOOR, the one weight-quantization source both engines run
+    (plain ROUND would round DuckDB's binary value while Spark's F.round
+    rounds the decimal string: subtly different on adversarial doubles).
+    NaN → NULL, which SUM skips; without the guard DuckDB errors on
+    NaN→BIGINT."""
+    x = f"(CAST({expr} AS DOUBLE) * {flit(divisor)})"
+    return (
+        f"CAST(CASE WHEN isnan({x}) THEN NULL WHEN {x} >= 0 "
+        f"THEN FLOOR({x} + 0.5) "
+        f"ELSE -FLOOR(-{x} + 0.5) END AS BIGINT)"
+    )
+
+
 def slit(s: str, dialect: str = DUCKDB) -> str:
-    """Single-quoted string literal.  Both engines read ``''`` as a quote;
-    Spark also treats a backslash as an escape, so it is doubled there."""
+    """Single-quoted string literal.  DuckDB escapes a quote as ``''``;
+    Spark escapes with backslashes, as ``lit(s).expr().sql()`` renders it."""
     if dialect == SPARK:
-        s = s.replace("\\", "\\\\")
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
     return "'" + s.replace("'", "''") + "'"
 
 

@@ -153,11 +153,9 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     "hist_quantile_bins", "sample_top_quality",
     # one bucketize source: small category sets compile to the same CASE
     # chain in the DuckDB oracle as in Spark (was list_position); Spark
-    # optimized plans are identical modulo expression IDs.  The fifth
-    # such entry, events_type_value_hist, is left out: moving it to the
-    # front would push hist_2d out of the 55-entry default test window
-    "hist_3d_grouped", "hist_growth_categories", "hist_intcategory",
-    "hist_strcategory",
+    # optimized plans are identical modulo expression IDs
+    "events_type_value_hist", "hist_3d_grouped", "hist_growth_categories",
+    "hist_intcategory", "hist_strcategory",
 )
 
 

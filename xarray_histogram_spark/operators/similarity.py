@@ -21,7 +21,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import flit
+from ..binspec import flit, scaled_weight_sql
 from ..functions import vectors as V
 
 DIM = 64
@@ -727,7 +727,7 @@ def kmeans_refine(
     The reason ivf_assign skips k-means — iterative float training cannot
     be mirrored bit-exactly — is dissolved by the engine's two standing
     determinism tools: per-component **int64 quantization**
-    (``oracle.scaled_weight_sql``; integer sums are addition-order independent, so
+    (``binspec.scaled_weight_sql``; integer sums are addition-order independent, so
     partial aggregation and DuckDB agree bit-for-bit) and the sequential
     **cosine fold** (functions.vectors).  A centroid component is
     ``(Σq / n) / scale`` — three IEEE ops on exact integers, identical in
@@ -787,7 +787,6 @@ def kmeans_refine(
             raise ValueError("kmeans_refine: cannot infer dim (empty input?)")
         dim = int(probe["d"])
 
-    from ..oracle import scaled_weight_sql
     from ..plans.histogram import sql_ident
 
     def _sums(assigned: DataFrame) -> DataFrame:
@@ -840,8 +839,6 @@ def kmeans_refine_sql(
     (ROW_NUMBER over the cross join) instead of the fold, quantized sums
     CAST AS BIGINT (SUM(BIGINT) is HUGEINT in DuckDB), identical
     (Σq / n) / scale centroid arithmetic."""
-    from ..oracle import scaled_weight_sql
-
     dvv = V.dot_sql(vec_col, vec_col)
     table = (
         f"(SELECT * FROM {table} WHERE {dvv} IS NOT NULL "

@@ -25,24 +25,8 @@ from __future__ import annotations
 import math
 from typing import Optional, Sequence
 
-from .binspec import BinSpec, flit, slit
+from .binspec import BinSpec, flit, scaled_weight_sql, slit
 from .plans.histogram import id_col, label_col, value_col_name
-
-
-def scaled_weight_sql(expr: str, divisor: float) -> str:
-    """Half-away-from-zero int64 quantization of ``expr·divisor`` via
-    sign-aware FLOOR — the exact IEEE mirror of the engine's
-    ``scaled_weight_col`` (plain ROUND would round DuckDB's binary value
-    while Spark's F.round rounds the decimal string: subtly different on
-    adversarial doubles)."""
-    x = f"(CAST({expr} AS DOUBLE) * {flit(divisor)})"
-    # NaN → NULL (skipped by SUM): matches the engine's scaled_weight_col
-    # and the Arrow kernel; without the guard DuckDB errors on NaN→BIGINT
-    return (
-        f"CAST(CASE WHEN isnan({x}) THEN NULL WHEN {x} >= 0 "
-        f"THEN FLOOR({x} + 0.5) "
-        f"ELSE -FLOOR(-{x} + 0.5) END AS BIGINT)"
-    )
 
 
 def _spine_values(var: str, spec: BinSpec, flow: bool) -> str:

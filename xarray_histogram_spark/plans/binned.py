@@ -11,7 +11,7 @@ so everything in SCALE.md's contraction analysis applies unchanged.
 
 Determinism (oracle-gated): ``count`` is an int64 count; ``sum`` and
 ``mean`` run on the exact-int64 quantization of ``value·10^scale``
-(``oracle.scaled_weight_sql`` — the same SQL on both engines), so sums are
+(``binspec.scaled_weight_sql`` — the same SQL on both engines), so sums are
 order-independent and ``mean`` is one double division of two exact ints;
 ``min``/``max`` are order-independent by definition.  Empty bins are NULL
 for sum/mean/min/max and 0 for count (matching scipy, whose empty-bin
@@ -27,7 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import SPARK, BinSpec
+from ..binspec import SPARK, BinSpec, flit, scaled_weight_sql
 from .histogram import (
     axis_meta_exprs,
     id_col,
@@ -205,14 +205,12 @@ def binned_statistic_sql(
 ) -> str:
     """DuckDB mirror of ``binned_statistic`` (same quantized sums, same
     NULL-for-empty semantics)."""
-    from ..oracle import _spine_values, scaled_weight_sql
+    from ..oracle import _spine_values
 
     group_by = list(group_by)
     bid = spec.raw_id_sql(x)
     lo, hi = spec.keep_range(flow)
     if weight_scale is not None:
-        from ..binspec import flit
-
         divisor = float(10**weight_scale)
         dv = flit(divisor)  # flit: a bare float literal parses as DECIMAL
         sw = scaled_weight_sql(value, divisor)

@@ -24,7 +24,7 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
   distributed sum is partitioning-dependent and can never hash-match an
   oracle bit-for-bit.  With ``weight_scale=s`` (default 6) weights are
   quantised to int64 (half-away-from-zero via sign-aware floor — see
-  ``oracle.scaled_weight_sql``, which both engines run) and summed as
+  ``binspec.scaled_weight_sql``, which both engines run) and summed as
   integers — exact, order-independent, identical in Spark and DuckDB
   (int64→double casts are hardware-rounded identically; DuckDB's
   DECIMAL→DOUBLE cast is NOT correctly rounded, which rules the DECIMAL
@@ -47,7 +47,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..binspec import SPARK, Bin, BinSpec, Integer, Regular, slit
+from ..binspec import (
+    SPARK,
+    Bin,
+    BinSpec,
+    Integer,
+    Regular,
+    scaled_weight_sql,
+    slit,
+)
 from .result import HistogramResult
 
 BinsArg = Union[int, BinSpec, Sequence[Union[int, BinSpec]]]
@@ -172,8 +180,6 @@ def weight_sql(
     the exact-int64 quantization of ``w·10^scale`` the DuckDB oracle runs
     too (``scaled_weight_sql``) — int_mode, an integer sum that is
     order-independent.  Otherwise the raw double."""
-    from ..oracle import scaled_weight_sql
-
     if weights is None:
         return None, True, 1.0
     if weight_scale is None:

@@ -23,7 +23,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import SPARK, BinSpec
+from ..binspec import SPARK, BinSpec, flit, scaled_weight_sql
 from .histogram import id_col, sql_ident
 
 
@@ -84,8 +84,6 @@ def rollup_histogramdd(
         raise ValueError("rollup_histogramdd needs at least one group column")
     if len(cols) != len(specs):
         raise ValueError("cols/specs length mismatch")
-    from ..oracle import scaled_weight_sql
-
     src = df
     for c, s in zip(cols, specs):
         if (p := s.keep_sql(sql_ident(c), flow, SPARK)) is not None:
@@ -132,9 +130,6 @@ def rollup_histogramdd_sql(
     weights: str | None = None,
     weight_scale: int | None = 6,
 ) -> str:
-    from ..binspec import flit
-    from ..oracle import scaled_weight_sql
-
     cols = list(cols)
     specs = list(specs)
     group_by = list(group_by)

@@ -27,7 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..binspec import SPARK, BinSpec
+from ..binspec import SPARK, BinSpec, scaled_weight_sql
 from ..plans.histogram import id_col, label_col, spark_lit, spine_df, sql_ident
 
 
@@ -71,8 +71,6 @@ def streaming_histogram(
     )
     if weights is not None:
         if weight_scale is not None:
-            from ..oracle import scaled_weight_sql
-
             scale = float(10**weight_scale)
             val = (
                 F.sum(F.expr(scaled_weight_sql("__wt", scale))).cast("double")
