@@ -67,6 +67,41 @@ def test_moment_order(lineitem):
         h.moment(0)
 
 
+@pytest.mark.parametrize(
+    "kind,kw,match",
+    [
+        ("ppf", {"q": []}, "at least one"),
+        ("ppf", {"q": [0.5, True]}, "q must be"),
+        ("moment", {"order": 2.5}, "integer"),
+        ("moment", {"order": True}, "integer"),
+        ("interval", {"confidence": float("nan")}, "confidence"),
+        ("cdf", {"x": "1.5"}, "number"),
+    ],
+)
+def test_bad_stat_inputs_raise_early(lineitem, kind, kw, match):
+    """Statistic inputs are checked once, before any plan is built, by the
+    same validator in the Spark planner and in the DuckDB oracle."""
+    from xarray_histogram_spark.oracle import stats_oracle_sql
+
+    spec = Regular(5, 1.0, 51.0)
+    h = histogram(lineitem, "l_quantity", spec)
+    with pytest.raises(ValueError, match=match):
+        getattr(h, kind)(**kw)
+    with pytest.raises(ValueError, match=match):
+        stats_oracle_sql(
+            kind, "lineitem", ["l_quantity"], [spec], "l_quantity", **kw
+        )
+
+
+def test_stat_inputs_accept_numpy_scalars(lineitem):
+    import numpy as np
+
+    h = histogram(lineitem, "l_quantity", Regular(5, 1.0, 51.0))
+    assert h.ppf(np.float32(0.5)).collect() == h.ppf(0.5).collect()
+    assert h.moment(np.int64(2)).collect() == h.moment(2).collect()
+    assert h.interval(np.float64(0.5)).collect() == h.interval(0.5).collect()
+
+
 def test_unknown_variable(lineitem):
     h = histogram(lineitem, "l_quantity", Regular(5, 1.0, 51.0))
     with pytest.raises(ValueError, match="unknown variable"):

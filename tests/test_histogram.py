@@ -714,3 +714,54 @@ def test_column_names_needing_quotes(spark, spec, col, flow):
         if flow:
             want[FLOW_STR] = 2  # NULL and "zz"
         assert got == want
+
+
+@pytest.mark.parametrize("weights", [None, "w"])
+def test_post_aggregate_names_needing_quotes(spark, weights):
+    """normalize and the statistics are SQL text as well, so their column
+    names are quoted identifiers: over a value column named ``unit price``
+    grouped by ``ret flag`` they equal the same results over plain names."""
+    plain = spark.createDataFrame(_QUOTE_ROWS, "x double, s string, w double")
+    odd = plain.toDF("unit price", "ret flag", "unit weight")
+    names = {"x": "unit price", "s": "ret flag", "w": "unit weight"}
+    spec = Regular(3, 0.0, 3.0)
+    want_h = histogram(plain, "x", spec, weights=weights, group_by=["s"])
+    got_h = histogram(odd, "unit price", spec, weights=names.get(weights),
+                      group_by=["ret flag"])
+    steps = [
+        lambda h, v: h.normalize().df,
+        lambda h, v: h.mean(v),
+        lambda h, v: h.median(v),
+        lambda h, v: h.cdf(1.5, v),
+    ]
+    for step in steps:
+        want, got = step(want_h, "x"), step(got_h, "unit price")
+        assert got.columns == [
+            names["s"] if c == "s" else c.replace("x", names["x"], 1)
+            for c in want.columns
+        ]
+        # repr: a NULL group key does not sort against strings
+        rows = sorted(repr(tuple(r)) for r in got.collect())
+        assert rows and rows == sorted(repr(tuple(r)) for r in want.collect())
+
+
+def test_negative_zero_edge_label_sign(spark):
+    """A -0.0 lower edge labels the first bin -0.0 in Spark and in the
+    DuckDB oracle alike: the double-literal renderer keeps the sign."""
+    import math
+
+    import duckdb
+
+    spec = Regular(4, -0.0, 1.0)
+    rows = [(0.1,), (0.6,)]
+    got = (
+        histogram(spark.createDataFrame(rows, "x double"), "x", spec)
+        .df.orderBy("x_bin").first()["x_bins"]
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?)", rows)
+    want = con.execute(
+        histogram_oracle_sql("t", ["x"], [spec]) + " ORDER BY x_bin"
+    ).fetchone()[1]
+    assert math.copysign(1.0, got) == math.copysign(1.0, want) == -1.0

@@ -262,26 +262,51 @@ def test_histogramdd_build_py4j_budget(spark, sf_dir, table, col, spec):
     from xarray_histogram_spark import histogramdd
 
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet").cache()
+    try:
+        histogramdd(df, [col], [spec])  # first build resolves the relation
+        n = py4j_commands(spark, lambda: histogramdd(df, [col], [spec]))
+    finally:
+        df.unpersist()
+    assert 0 < n <= 250
+
+
+@pytest.mark.parametrize("kind", ["mean", "var", "median", "interval"])
+def test_stat_build_py4j_budget(spark, sf_dir, kind):
+    """A statistic's maths is SQL text parsed in a few expressions, so
+    building it on a grouped histogram stays within a small py4j budget
+    (the Column-built folds and windows cost 395-783 commands)."""
+    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").cache()
+    h = histogram(df, "l_quantity", Regular(25, 1.0, 51.0),
+                  group_by=["l_returnflag"])
+    args = {"interval": (0.9,)}.get(kind, ())
+    try:
+        getattr(h, kind)(*args)  # first build resolves the relation
+        n = py4j_commands(spark, lambda: getattr(h, kind)(*args))
+    finally:
+        df.unpersist()
+    assert 0 < n <= 100
+
+
+def py4j_commands(spark, build) -> int:
+    """py4j commands sent while ``build()`` runs, without py4j's
+    object-release messages ("m\\nd\\n<id>"), which follow garbage
+    collection timing, not the work of the call."""
     gc = spark.sparkContext._gateway._gateway_client
     orig = gc.send_command
     n = 0
 
     def counting(command, *args, **kwargs):
         nonlocal n
-        # py4j's object-release messages ("m\nd\n<id>") follow garbage
-        # collection timing, not the work of the call
         if not command.startswith("m\nd\n"):
             n += 1
         return orig(command, *args, **kwargs)
 
+    gc.send_command = counting
     try:
-        histogramdd(df, [col], [spec])  # first build resolves the relation
-        gc.send_command = counting
-        histogramdd(df, [col], [spec])
+        build()
     finally:
         gc.send_command = orig
-        df.unpersist()
-    assert 0 < n <= 250
+    return n
 
 
 def test_registry_wide_no_python_eval(spark, sf_dir):

@@ -64,7 +64,8 @@ def flit(v: float) -> str:
         return "CAST('infinity' AS DOUBLE)" if v > 0 else "CAST('-infinity' AS DOUBLE)"
     if math.isnan(v):
         return "CAST('nan' AS DOUBLE)"
-    if v == int(v) and abs(v) < 1e15:
+    # -0.0 keeps its sign through repr; CAST(0 AS DOUBLE) would drop it
+    if v == int(v) and abs(v) < 1e15 and repr(v) != "-0.0":
         return f"CAST({int(v)} AS DOUBLE)"
     return f"CAST('{v!r}' AS DOUBLE)"
 

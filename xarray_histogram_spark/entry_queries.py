@@ -156,6 +156,15 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     # optimized plans are identical modulo expression IDs
     "events_type_value_hist", "hist_3d_grouped", "hist_growth_categories",
     "hist_intcategory", "hist_strcategory",
+    # one post-aggregate source: density, the display value and every
+    # statistic are SQL text the Spark planner parses and the oracle
+    # composes (oracle strings byte-identical; the ppf-family plans gain
+    # one rename projection above the running-sum windows)
+    "stat_mean", "stat_var", "stat_std", "stat_moment3", "stat_median",
+    "stat_ppf90", "stat_interval80", "stat_cdf25", "stat_mean_weighted",
+    "stat_mean_2d", "stat_median_2d",
+    "hist_density", "hist_density_flow", "hist_weighted_grouped_density",
+    "alg_normalize_after", "hist_adopt_roundtrip", "hist_merge_shards",
 )
 
 

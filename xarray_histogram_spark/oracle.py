@@ -1,32 +1,37 @@
-"""DuckDB oracle-SQL generation mirroring the Spark histogram planner.
+"""DuckDB oracle SQL for the Spark histogram planner.
 
 The driver's correctness gate runs each Spark query AND an ANSI-SQL oracle in
 DuckDB side-by-side and hash-compares values.  Floating-point results only
 hash-match if both engines execute the *same IEEE-754 operations in the same
-order*, so this module generates SQL from the very same BinSpec objects the
-Spark planner compiles, mirroring:
+order*, so this module composes its CTEs from the very SQL text the Spark
+planner parses, rendered from the same BinSpec objects:
 
-- the bucketize arithmetic (``BinSpec.raw_id_sql`` — identical literals via
-  ``repr``, identical op order, no runtime transcendentals on the exact path);
-- the exact-int64 value representation (counts, and weighted sums of
-  ``round(w·10^s)``) — integer addition is order-independent, and the final
-  int64→double cast is hardware-rounded identically in both engines (unlike
-  DuckDB's DECIMAL→DOUBLE cast, which is observably off by an ulp);
-- the dense spine join with groups derived from the aggregated output;
-- the density window (flow-excluded integer total; flow cells ÷ total, area 1).
+- the bucketize (``BinSpec.raw_id_sql`` and the weight quantization
+  ``scaled_weight_sql`` — identical literals, op order, no runtime
+  transcendentals on the exact path);
+- the post-aggregate value: the density window and the display value
+  (``plans.histogram.finish_value_sql``) and every distribution statistic
+  (``plans.stats``: the checked inputs, the bin-list fold, the running sums
+  and ppf crossing, the cdf bracket).
 
-Spine VALUES literals are explicitly CAST — DuckDB parses bare numeric
-literals as DECIMAL, which would silently change column types and poison
-arithmetic with decimal semantics.
+Only the assembly is the oracle's own: the aggregate, the dense spine join
+with groups derived from the aggregated output, and the CTE chain.  Values
+are exact int64 (counts, and weighted sums of ``round(w·10^s)``) — integer
+addition is order-independent, and the final int64→double cast is
+hardware-rounded identically in both engines (unlike DuckDB's
+DECIMAL→DOUBLE cast, which is observably off by an ulp).  Spine VALUES
+literals are explicitly CAST — DuckDB parses bare numeric literals as
+DECIMAL, which would silently change column types and poison arithmetic
+with decimal semantics.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Optional, Sequence
 
-from .binspec import BinSpec, flit, scaled_weight_sql, slit
-from .plans.histogram import id_col, label_col, value_col_name
+from .binspec import DUCKDB, BinSpec, flit, scaled_weight_sql, slit
+from .plans import stats as st
+from .plans.histogram import finish_value_sql, id_col, label_col, value_col_name
 
 
 def _spine_values(var: str, spec: BinSpec, flow: bool) -> str:
@@ -144,39 +149,6 @@ def histogram_oracle_ctes(
     return ctes, int_mode, divisor
 
 
-def density_sql_expr(
-    norm_vars: Sequence[str],
-    partition_keys: Sequence[str],
-    int_mode: bool,
-    divisor: float,
-) -> str:
-    """Mirror of plans.histogram._density_expr."""
-    any_flow = " OR ".join(f"__{v}_is_flow" for v in norm_vars)
-    area = " * ".join(f"__{v}_width" for v in norm_vars)
-    part = f"PARTITION BY {', '.join(partition_keys)}" if partition_keys else ""
-    if int_mode:
-        total = (
-            f"SUM(CASE WHEN {any_flow} THEN CAST(0 AS BIGINT) ELSE __val END) "
-            f"OVER ({part})"
-        )
-        raw = "CAST(__val AS DOUBLE)"
-        total_d = f"CAST({total} AS DOUBLE)"
-        if divisor != 1.0:
-            raw = f"{raw} / {flit(divisor)}"
-            total_d = f"{total_d} / {flit(divisor)}"
-    else:
-        total_d = (
-            f"SUM(CASE WHEN {any_flow} THEN CAST(0.0 AS DOUBLE) ELSE __val END) "
-            f"OVER ({part})"
-        )
-        raw = "__val"
-    total_nz = f"NULLIF({total_d}, CAST(0.0 AS DOUBLE))"
-    return (
-        f"CASE WHEN {any_flow} THEN {raw} / {total_nz} "
-        f"ELSE {raw} / ({area}) / {total_nz} END"
-    )
-
-
 def histogram_oracle_sql(
     table: str,
     cols: Sequence[str],
@@ -212,16 +184,10 @@ def histogram_oracle_sql(
     out_cols = (
         list(group_by) + [id_col(c) for c in cols] + [label_col(c) for c in cols]
     )
-    if density:
-        vexpr = density_sql_expr(cols, group_by, int_mode, divisor)
-    elif int_mode and weights is None and storage == "int64":
-        vexpr = "__val"
-    elif int_mode:
-        vexpr = "CAST(__val AS DOUBLE)"
-        if divisor != 1.0:
-            vexpr = f"{vexpr} / {flit(divisor)}"
-    else:
-        vexpr = "__val"
+    vexpr = finish_value_sql(
+        cols, group_by, density=density, int_mode=int_mode, divisor=divisor,
+        int64_out=weights is None and storage == "int64", dialect=DUCKDB,
+    )
     final = f"SELECT {', '.join(out_cols)}, {vexpr} AS {vname} FROM filled"
     return "WITH " + ", ".join(ctes) + " " + final
 
@@ -294,46 +260,17 @@ def histogram_columns_oracle_sql(
         f"ON d.__d = a.__d AND d.{bin_id} = a.{bin_id}"
     )
     vname = value_col_name([var_name], density)
-    if density:
-        vexpr = density_sql_expr([var_name], [dim_name], int_mode, divisor)
-    elif int_mode and weights is None and storage == "int64":
-        vexpr = "__val"
-    elif int_mode:
-        vexpr = "CAST(__val AS DOUBLE)"
-        if divisor != 1.0:
-            vexpr = f"{vexpr} / {flit(divisor)}"
-    else:
-        vexpr = "__val"
+    vexpr = finish_value_sql(
+        [var_name], [dim_name], density=density, int_mode=int_mode,
+        divisor=divisor, int64_out=weights is None and storage == "int64",
+        dialect=DUCKDB,
+    )
     return (
         f"WITH base AS ({base}), agg AS ({agg}), dense AS ({dense}), "
         f"filled AS ({filled}) "
         f"SELECT {dim_name}, {bin_id}, {label_col(var_name)}, "
         f"{vexpr} AS {vname} FROM filled"
     )
-
-
-# ---------------------------------------------------------------------------
-# statistics mirrors (plans.stats) — see that module's determinism notes
-# ---------------------------------------------------------------------------
-
-_D0 = "CAST(0.0 AS DOUBLE)"
-
-
-def _fold_sql(term: str) -> str:
-    """Strict sequential left fold with 0.0 seed over the per-group bin list
-    ``a`` — mirrors Spark's ``F.aggregate(arr, lit(0.0), acc + term)``
-    (the prepended 0.0 reproduces Spark's seed so even the first addition
-    is identical)."""
-    return (
-        f"list_reduce(list_prepend({_D0}, list_transform(a, x -> {term})), "
-        f"(p, q) -> p + q)"
-    )
-
-
-def _ratio_sql(num: str, tot: str) -> str:
-    # self-parenthesised: this fragment gets composed into larger expressions
-    # (e.g. e1 * e1) and must keep its own association bit-for-bit
-    return f"({num} / NULLIF({tot}, {_D0}))"
 
 
 def stats_oracle_sql(
@@ -354,14 +291,14 @@ def stats_oracle_sql(
     weight_scale: Optional[int] = 6,
     where: Optional[str] = None,
 ) -> str:
-    """DuckDB SQL mirroring ``plans.stats.<kind>`` on the histogram defined by
-    the same arguments.  ``kind`` ∈ {mean, var, std, moment, median, ppf,
-    interval, cdf}."""
+    """DuckDB SQL of ``plans.stats.<kind>`` on the histogram defined by the
+    same arguments, composed from the renderers the Spark planner parses.
+    ``kind`` ∈ {mean, var, std, moment, median, ppf, interval, cdf}."""
     cols = list(cols)
     specs = list(specs)
     group_by = list(group_by)
     v = variable
-    spec = dict(zip(cols, specs))[v]
+    outs = st.stat_params(kind, v, order=order, q=q, confidence=confidence, x=x)
     ctes, int_mode, divisor = histogram_oracle_ctes(
         table, cols, specs, weights=weights, group_by=group_by,
         group_exprs=group_exprs, flow=flow, weight_scale=weight_scale,
@@ -374,92 +311,20 @@ def stats_oracle_sql(
     part = group_by + [id_col(c) for c in cols if c != v]
     psel = (", ".join(part) + ", ") if part else ""
     pgroup = f" GROUP BY {', '.join(part)}" if part else ""
-    vd = "CAST(__val AS DOUBLE)"
-
-    if kind in ("mean", "var", "std", "moment"):
-        g = (
-            f"SELECT {psel}list(struct_pack(i := {id_col(v)}, m := {vd}, "
-            f"c := __{v}_center, w := __{v}_width) ORDER BY {id_col(v)}) AS a "
-            f"FROM core{pgroup}"
+    if kind in st.MOMENTS:
+        ctes.append(
+            f"g AS (SELECT {psel}{st.bin_list_sql(v, DUCKDB)} FROM core{pgroup})"
         )
-        ctes.append(f"g AS ({g})")
-        tot = _fold_sql("x.m")
-        e1 = _ratio_sql(_fold_sql("x.m * x.c"), tot)
-        if kind == "mean":
-            expr, name = e1, f"{v}_mean"
-        elif kind == "moment":
-            e = "x.c"
-            for _ in range(order - 1):
-                e = f"({e} * x.c)"
-            expr = _ratio_sql(_fold_sql(f"x.m * {e}"), tot)
-            name = f"{v}_moment{order}"
-        else:
-            e2 = _ratio_sql(
-                _fold_sql(f"x.m * (x.c * x.c + x.w * x.w / {flit(12.0)})"), tot
-            )
-            expr = f"{e2} - ({e1} * {e1})"
-            name = f"{v}_var"
-            if kind == "std":
-                expr, name = f"sqrt({expr})", f"{v}_std"
-        final = f"SELECT {psel}{expr} AS {name} FROM g"
-        return "WITH " + ", ".join(ctes) + " " + final
-
-    if kind in ("median", "ppf", "interval"):
-        if kind == "median":
-            qs, names = [0.5], [f"{v}_median"]
-        elif kind == "interval":
-            alpha = (1.0 - float(confidence)) / 2.0
-            qs, names = [alpha, 1.0 - alpha], [f"{v}_low", f"{v}_high"]
-        else:
-            qs = [q] if isinstance(q, (int, float)) else list(q)
-            names = [
-                f"{v}_ppf" if len(qs) == 1 else f"{v}_ppf_{i}"
-                for i, _ in enumerate(qs)
-            ]
-        opart = f"PARTITION BY {', '.join(part)} " if part else ""
-        # int_mode: exact-int64 running sums (HUGEINT→BIGINT first, the
-        # oracle-wide convention); raw-double mode (weight_scale=None)
-        # must stay DOUBLE — a BIGINT cast would truncate fractional mass
-        st = "BIGINT" if int_mode else "DOUBLE"
-        c2 = (
-            f"SELECT {psel}{id_col(v)}, CAST({label_col(v)} AS DOUBLE) AS __left, "
-            f"__{v}_width AS __w, __val, "
-            f"CAST(SUM(__val) OVER ({opart}ORDER BY {id_col(v)}) AS {st}) AS __cum, "
-            f"CAST(SUM(__val) OVER ({opart.strip() or ''}) AS {st}) AS __tot "
-            f"FROM core"
-        )
-        ctes.append(f"c2 AS ({c2})")
-        sels = []
-        for name, qq in zip(names, qs):
-            qt = f"{flit(float(qq))} * CAST(__tot AS DOUBLE)"
-            cumb = "CAST(__cum - __val AS DOUBLE)"
-            cross = f"CAST(__cum AS DOUBLE) >= {qt} AND {cumb} < {qt}"
-            interp = f"__left + ({qt} - {cumb}) / CAST(__val AS DOUBLE) * __w"
-            sels.append(f"MAX(CASE WHEN {cross} THEN {interp} END) AS {name}")
-        final = f"SELECT {psel}{', '.join(sels)} FROM c2{pgroup}"
-        return "WITH " + ", ".join(ctes) + " " + final
-
-    if kind == "cdf":
-        bins = spec.core_bins()
-        xx = float(x)
-        if math.isnan(xx):
-            # mirror stats.cdf's guard — NaN passes neither range check
-            # and would StopIteration out of the bin search below
-            raise ValueError("cdf: x must not be NaN")
-        if xx < bins[0].left:
-            j, frac = -1, 0.0
-        elif xx >= bins[-1].right:
-            j, frac = spec.n, 0.0
-        else:
-            j = next(i for i, b in enumerate(bins) if b.left <= xx < b.right)
-            b = bins[j]
-            frac = (xx - b.left) / (b.right - b.left)
-        st = "BIGINT" if int_mode else "DOUBLE"  # see the ppf note above
-        below = f"CAST(CAST(SUM(CASE WHEN {id_col(v)} < {j} THEN __val ELSE 0 END) AS {st}) AS DOUBLE)"
-        at = f"CAST(CAST(SUM(CASE WHEN {id_col(v)} = {j} THEN __val ELSE 0 END) AS {st}) AS DOUBLE)"
-        tot = f"CAST(CAST(SUM(__val) AS {st}) AS DOUBLE)"
-        expr = f"({below} + {at} * {flit(frac)}) / NULLIF({tot}, {_D0})"
-        final = f"SELECT {psel}{expr} AS {v}_cdf FROM core{pgroup}"
-        return "WITH " + ", ".join(ctes) + " " + final
-
-    raise ValueError(f"unknown stat kind {kind!r}")
+        sels = [st.moment_sql(kind, p, DUCKDB) for _, p in outs]
+        src = "g"
+    elif kind in st.QUANTILES:
+        sums = ", ".join(st.running_sums_sql(v, part, int_mode, DUCKDB))
+        ctes.append(f"c2 AS (SELECT {sums} FROM core)")
+        sels = [st.crossing_sql(p) for _, p in outs]
+        src = f"c2{pgroup}"
+    else:
+        spec = dict(zip(cols, specs))[v]
+        sels = [st.cdf_sql(v, spec, p, int_mode, DUCKDB) for _, p in outs]
+        src = f"core{pgroup}"
+    cols_sql = ", ".join(f"{e} AS {n}" for e, (n, _) in zip(sels, outs))
+    return "WITH " + ", ".join(ctes) + f" SELECT {psel}{cols_sql} FROM {src}"

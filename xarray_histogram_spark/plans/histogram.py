@@ -37,12 +37,11 @@ Scale notes (designed for ~100 TB inputs, 1000 executors):
 
 from __future__ import annotations
 
-import math
 from dataclasses import replace as dc_replace
 from functools import reduce
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -53,6 +52,7 @@ from ..binspec import (
     BinSpec,
     Integer,
     Regular,
+    flit,
     scaled_weight_sql,
     slit,
 )
@@ -172,6 +172,12 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def ident_sql(name: str, dialect: str) -> str:
+    """A column name in rendered SQL: quoted for Spark, where user names may
+    hold any character; bare for the DuckDB oracle, whose names are plain."""
+    return sql_ident(name) if dialect == SPARK else name
+
+
 def weight_sql(
     weights: Optional[str], weight_scale: Optional[int]
 ) -> tuple[Optional[str], bool, float]:
@@ -189,13 +195,10 @@ def weight_sql(
 
 
 def spark_lit(v, typ: str) -> str:
-    """Spark-SQL literal with exact repr round-trip (doubles go through a
-    VARCHAR cast so the parsed value is bit-identical to the Python float)."""
+    """Spark-SQL literal that parses back to exactly ``v`` (doubles are
+    ``flit``, the one double-literal renderer both engines read)."""
     if typ == "double":
-        x = float(v)
-        if math.isinf(x):
-            return f"CAST('{'Infinity' if x > 0 else '-Infinity'}' AS DOUBLE)"
-        return f"CAST('{x!r}' AS DOUBLE)"
+        return flit(v)
     if typ == "bigint":
         return f"CAST({int(v)} AS BIGINT)"
     if typ == "boolean":
@@ -643,38 +646,62 @@ def finish_from_agg(
     )
 
 
-def _density_expr(
+def value_sql(int_mode: bool, divisor: float, int64_out: bool) -> str:
+    """Display value of the aggregate ``__val``: the int64 count itself
+    (``int64_out``), the exact count or scaled-int sum as a double divided
+    back by ``divisor``, or the raw double sum."""
+    if not int_mode or int64_out:
+        return "__val"
+    val = "CAST(__val AS DOUBLE)"
+    return f"{val} / {flit(divisor)}" if divisor != 1.0 else val
+
+
+def density_sql(
     norm_vars: Sequence[str],
     partition_keys: Sequence[str],
     int_mode: bool,
     divisor: float,
-) -> Column:
+    dialect: str,
+) -> str:
     """Histogram → PDF along ``norm_vars`` (core.py:649-663 semantics):
     the total EXCLUDES flow bins, and EVERY cell — flow included — is
     divided by ``area × total``; ``get_area`` (core.py:638-646) forces flow
     areas to 1, so flow cells come out as ``raw / total``.  In int_mode the
     window total is an exact integer sum → deterministic under any
     partitioning."""
-    any_flow = reduce(
-        lambda a, b: a | b, [F.col(f"__{v}_is_flow") for v in norm_vars]
-    )
-    area = reduce(lambda a, b: a * b, [F.col(f"__{v}_width") for v in norm_vars])
-    w = Window.partitionBy(*[F.col(k) for k in partition_keys])
+    keys = [ident_sql(k, dialect) for k in partition_keys]
+    any_flow = " OR ".join(ident_sql(f"__{v}_is_flow", dialect) for v in norm_vars)
+    area = " * ".join(ident_sql(f"__{v}_width", dialect) for v in norm_vars)
+    part = f"PARTITION BY {', '.join(keys)}" if keys else ""
+    zero = "CAST(0 AS BIGINT)" if int_mode else "CAST(0.0 AS DOUBLE)"
+    total = f"SUM(CASE WHEN {any_flow} THEN {zero} ELSE __val END) OVER ({part})"
+    raw = value_sql(int_mode, divisor, False)
     if int_mode:
-        zero = F.lit(0).cast("bigint")
-        total = F.sum(F.when(any_flow, zero).otherwise(F.col("__val"))).over(w)
-        raw = F.col("__val").cast("double")
-        total_d = total.cast("double")
+        total = f"CAST({total} AS DOUBLE)"
         if divisor != 1.0:
-            raw = raw / F.lit(divisor)
-            total_d = total_d / F.lit(divisor)
-    else:
-        total_d = F.sum(
-            F.when(any_flow, F.lit(0.0)).otherwise(F.col("__val"))
-        ).over(w)
-        raw = F.col("__val")
-    total_nz = F.nullif(total_d, F.lit(0.0))
-    return F.when(any_flow, raw / total_nz).otherwise(raw / area / total_nz)
+            total = f"{total} / {flit(divisor)}"
+    total_nz = f"NULLIF({total}, CAST(0.0 AS DOUBLE))"
+    return (
+        f"CASE WHEN {any_flow} THEN {raw} / {total_nz} "
+        f"ELSE {raw} / ({area}) / {total_nz} END"
+    )
+
+
+def finish_value_sql(
+    cols: Sequence[str],
+    group_by: Sequence[str],
+    *,
+    density: bool,
+    int_mode: bool,
+    divisor: float,
+    int64_out: bool,
+    dialect: str,
+) -> str:
+    """The value column of a finished histogram: its density over
+    ``cols`` within each group, or its display value."""
+    if density:
+        return density_sql(cols, group_by, int_mode, divisor, dialect)
+    return value_sql(int_mode, divisor, int64_out)
 
 
 def histogram_columns(
@@ -873,17 +900,11 @@ def _finish_value_col(
     """Shared tail: dense labelled rows with ``__val`` → display value
     column + HistogramResult wrapper."""
     vname = value_col_name(cols, density)
-    if density:
-        vis = _density_expr(cols, group_by, int_mode, divisor)
-    elif int_mode and not weighted and storage == "int64":
-        vis = F.col("__val")
-    elif int_mode:
-        vis = F.col("__val").cast("double")
-        if divisor != 1.0:
-            vis = vis / F.lit(divisor)
-    else:
-        vis = F.col("__val")
-    out = filled.withColumn(vname, vis)
+    vis = finish_value_sql(
+        cols, group_by, density=density, int_mode=int_mode, divisor=divisor,
+        int64_out=not weighted and storage == "int64", dialect=SPARK,
+    )
+    out = filled.withColumn(vname, F.expr(vis))
     return HistogramResult(
         _df=out,
         variables=cols,
@@ -988,8 +1009,6 @@ def values_at_ranks(
     for b in range(B):
         offsets[b] = acc
         acc += counts.get(b, 0)
-    from pyspark.sql.window import Window as _W
-
     # keys and offsets both explicitly bigint (the ``L`` literal suffix):
     # offsets exceed 2^31 at exactly the >2^31-row scale this path targets,
     # and map() rejects mixed value types.  row_number is 32-bit-bounded PER
@@ -1003,7 +1022,7 @@ def values_at_ranks(
     ) + ")"
     off = F.element_at(F.expr(map_sql), F.col("b").cast("bigint"))
     rn = (
-        F.row_number().over(_W.partitionBy("b").orderBy("x")).cast("bigint")
+        F.row_number().over(Window.partitionBy("b").orderBy("x")).cast("bigint")
         - 1 + off
     ).alias("rn")
     rows = bx.select("x", rn).where(F.col("rn").isin(list(targets))).collect()

@@ -24,7 +24,6 @@ from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..binspec import BinSpec, Variable
 
@@ -147,9 +146,10 @@ class HistogramResult:
                 raise ValueError(f"unknown variable {v!r}")
         other = [v for v in self.variables if v not in vs]
         part = self.group_by + [f"{v}_bin" for v in other]
-        from .histogram import _density_expr
+        from ..binspec import SPARK
+        from .histogram import density_sql
 
-        pdf = _density_expr(vs, part, self.int_mode, self.divisor)
+        pdf = F.expr(density_sql(vs, part, self.int_mode, self.divisor, SPARK))
         new_name = (
             self.value_col[: -len("_histogram")] + "_pdf"
             if self.value_col.endswith("_histogram")
@@ -394,15 +394,15 @@ class HistogramResult:
         for o in others:
             unioned = unioned.unionByName(o._df)
         summed = unioned.groupBy(*keep).agg(F.sum("__val").alias("__val"))
-        vis = F.col("__val")
-        if self.int_mode and self.value_col.endswith("_histogram"):
-            # recompute the visible value like the planner does
-            storage_int = dict(self._df.dtypes).get(self.value_col) == "bigint"
-            if not storage_int:
-                vis = vis.cast("double")
-                if self.divisor != 1.0:
-                    vis = vis / F.lit(self.divisor)
-        out = summed.withColumn(self.value_col, vis)
+        from .histogram import value_sql
+
+        # recompute the visible value like the planner does
+        int64_out = (
+            self.int_mode
+            and dict(self._df.dtypes).get(self.value_col) == "bigint"
+        )
+        vis = value_sql(self.int_mode, self.divisor, int64_out)
+        out = summed.withColumn(self.value_col, F.expr(vis))
         return replace(self, _df=out, _sparse=None)
 
     def __add__(self, other: "HistogramResult") -> "HistogramResult":
